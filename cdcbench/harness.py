@@ -47,7 +47,7 @@ def start_session(work: str, event_log_dir: str | None) -> SparkSession:
         "spark.driver.memory": DRIVER_HEAP,
         "spark.local.dir": os.path.join(work, "spark-local"),
         "spark.sql.warehouse.dir": os.path.join(work, "warehouse"),
-        "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={tmp}",
+        "spark.driver.extraJavaOptions": f"-Xms{DRIVER_HEAP} -Djava.io.tmpdir={tmp}",
         "spark.ui.showConsoleProgress": "false",
     }
     if event_log_dir is not None:
@@ -100,16 +100,14 @@ def generate(spark, n_base: int, n_events: int, seed: int) -> tuple[DataFrame, D
     return base, events
 
 
-def check_pin(
-    spark, workload: str, n_base: int, n_events: int, write: bool = False, frames=None,
-) -> str:
+def check_pin(spark, workload: str, n_base: int, n_events: int, frames=None) -> str:
     """Digest of the workload's input at the default seed (whatever seed
     the run uses), compared with the pinned value, so that a change to the
     generator cannot silently change the load. Pins are kept per input
     size and cover the base and the first PIN_EVENTS events (the filter
     is pushed below the generator, so the rest is never computed);
     ``frames`` passes the default-seed input when the run already
-    generated it; ``write`` records the digest instead of checking it."""
+    generated it."""
     base, events = frames or generate(spark, n_base, n_events, DEFAULT_SEED)
     digests = [frame_digest(base)]
     if n_events:
@@ -118,16 +116,16 @@ def check_pin(
     key = f"{workload}:{n_base}:{n_events}"
     with open(PINS_PATH) as f:
         pins = json.load(f)
-    if write:
-        pins[key] = h
-        with open(PINS_PATH, "w") as f:
-            json.dump(pins, f, indent=1, sort_keys=True)
-            f.write("\n")
-    elif pins.get(key) != h:
+    if key not in pins:
         raise SystemExit(
-            f"input pin mismatch for {key}: generated {h}, pinned"
-            f" {pins.get(key)}. The generator changed the workload; re-pin"
-            " on purpose with --pin."
+            f"no input pin for {key} (this input size): pinned sizes are"
+            f" {sorted(pins)}. To add it, set pins.json[{key!r}] to {h!r}."
+        )
+    if pins[key] != h:
+        raise SystemExit(
+            f"input pin mismatch for {key}: generated {h}, pinned {pins[key]}."
+            " The generator changed the workload. If that change is intended,"
+            f" set pins.json[{key!r}] to {h!r}."
         )
     return h
 
@@ -298,6 +296,15 @@ def peak_rss_mb(spark) -> float:
 
     jvm = spark.sparkContext._gateway.proc.pid
     return (hwm("self") + hwm(jvm)) / 1024.0
+
+
+def cpu_ticks() -> tuple[int, int]:
+    """(steal, total) CPU ticks of all CPUs since boot, from /proc/stat.
+    Steal is time the hypervisor ran something else on this machine's
+    virtual CPUs; runs with a few percent of it are markedly slower."""
+    with open("/proc/stat") as f:
+        v = [int(x) for x in f.readline().split()[1:9]]
+    return v[7], sum(v)
 
 
 def fs_type(path: str) -> str:

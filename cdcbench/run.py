@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 cdcbench/run.py --workload backfill_cow --seed 1 --seconds 10 --trace 0
+    python3 cdcbench/run.py --workload backfill_cow --seed 1 --seconds 20 --trace 0
 
 Runs one workload on one ``local[nproc]`` session from the root of a
 checkout, checks every sink against an independent reference, prints a
@@ -9,8 +9,7 @@ report and, as the last line of standard output, one JSON object:
 metrics are the end-to-end ones; with ``--trace 1`` the per-layer ones
 (the traced run also reports its overhead against the last untraced run
 of the same workload and seed). ``--selftest`` corrupts one sink row
-before the check and exits 0 only if the check catches it. ``--pin``
-records the input digest instead of checking it.
+before the check and exits 0 only if the check catches it.
 
 Everything the run writes lives under ``.cdcbench/`` in the checkout; the
 work directory is deleted when the run ends.
@@ -37,6 +36,7 @@ E2E_UNITS = {
     "setup_s": "s",
     "op_p50_s": "s",
     "work_per_s": "1/s",
+    "peak_rss_mb": "MB",
     "space_amp": "ratio",
 }
 
@@ -45,10 +45,9 @@ def parse_args(argv=None):
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload", required=True, choices=WORKLOAD_NAMES)
     p.add_argument("--seed", type=int, default=1)
-    p.add_argument("--seconds", type=int, default=10)
+    p.add_argument("--seconds", type=int, default=20)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--selftest", action="store_true")
-    p.add_argument("--pin", action="store_true")
     return p.parse_args(argv)
 
 
@@ -63,6 +62,7 @@ def main(argv=None) -> int:
     import tracing
     from workloads import WORKLOADS, Ctx
 
+    ticks0 = harness.cpu_ticks()
     state = os.path.join(ROOT, ".cdcbench")
     work = os.path.join(state, f"work-{os.getpid()}")
     shutil.rmtree(work, ignore_errors=True)
@@ -74,7 +74,7 @@ def main(argv=None) -> int:
         spark = harness.start_session(work, event_log)
         ctx = Ctx(
             spark=spark, seed=args.seed, seconds=args.seconds, work=work,
-            tracer=None, corrupt=args.selftest, pin=args.pin,
+            tracer=None, corrupt=args.selftest,
         )
         ctx.setup["session_s"] = time.time() - t
         if args.trace:
@@ -86,32 +86,28 @@ def main(argv=None) -> int:
             if tracer is not None:
                 tracer.uninstall()
         rss = harness.peak_rss_mb(spark)
+        steal, total = (b - a for a, b in zip(ticks0, harness.cpu_ticks()))
         host = {
             "nproc": harness.nproc(),
             "spark": spark.version,
             "python": platform.python_version(),
             "driver_heap": harness.DRIVER_HEAP,
             "work_fs": harness.fs_type(work),
+            "cpu_steal_frac": steal / total if total else 0.0,
         }
         harness.stop_session(spark)
-        # the extra bootstrap repetitions are not part of set-up: only
-        # their median counts (it is already inside the elapsed time)
-        reps = ctx.setup["bootstrap_reps_s"]
-        setup_s = (
-            out.first_timed_at - PROCESS_START - ctx.setup["gen_s"]
-            - (sum(reps) - ctx.setup["bootstrap_s"])
-        )
         e2e = {
-            "setup_s": setup_s,
+            "setup_s": out.first_timed_at - PROCESS_START - ctx.setup["gen_s"],
             "op_p50_s": harness.median(out.op_walls),
             "work_per_s": out.work_units / sum(out.op_walls),
+            "peak_rss_mb": rss,
             "space_amp": out.space_amp,
         }
         failed = sum(1 for c in out.checks if not c["ok"])
         report = {
             "workload": args.workload, "seed": args.seed, "seconds": args.seconds,
             "trace": args.trace, "host": host, "setup": ctx.setup,
-            "end_to_end": e2e, "peak_rss_mb": rss, "details": details(args.workload, out),
+            "end_to_end": e2e, "details": details(args.workload, out),
             "checks": out.checks,
         }
         if args.trace:
@@ -199,6 +195,7 @@ def print_report(r: dict) -> None:
         f"# {r['workload']} seed={r['seed']} seconds={r['seconds']} trace={r['trace']}"
         f" | nproc={h['nproc']} spark={h['spark']} python={h['python']}"
         f" heap={h['driver_heap']} work_fs={h['work_fs']}"
+        f" cpu_steal={h['cpu_steal_frac']:.3f}"
     )
     for c in r["checks"]:
         print(f"check {c['name']}: {'ok' if c['ok'] else 'FAILED'} {c}")
@@ -207,7 +204,6 @@ def print_report(r: dict) -> None:
     print("setup parts: " + ", ".join(
         f"{k}={v:.3f}" for k, v in r["setup"].items() if isinstance(v, float)
     ))
-    print(f"peak_rss_mb = {r['peak_rss_mb']:.1f} MB (driver Python + JVM, VmHWM)")
     print(f"run wall = {r['run_wall_s']:.1f} s, of which {r['after_timed_s']:.1f} s after"
           " the timed phase (checks, space, shutdown)")
     for k, v in r["details"].items():

@@ -51,7 +51,6 @@ class Ctx:
     work: str
     tracer: object | None
     corrupt: bool = False
-    pin: bool = False
     setup: dict = field(default_factory=dict)
 
 
@@ -85,7 +84,7 @@ def _inputs(ctx: Ctx, name: str, n_base: int, n_events: int, chunk: int, base_ma
     t = time.time()
     base, events = generate(spark, n_base, n_events, ctx.seed)
     check_pin(
-        spark, name, n_base, n_events, write=ctx.pin,
+        spark, name, n_base, n_events,
         frames=(base, events) if ctx.seed == DEFAULT_SEED else None,
     )
     if base_map is not None:
@@ -100,21 +99,12 @@ def _inputs(ctx: Ctx, name: str, n_base: int, n_events: int, chunk: int, base_ma
     return root, base, ev, n_chunks
 
 
-def _bootstrap_reps(ctx: Ctx, make, reps: int = 3):
-    """Set the sinks up ``reps`` times (all but the last on scratch paths,
-    then deleted) and keep the median as setup.bootstrap_s."""
-    times, tables = [], None
-    for r in range(reps):
-        last = r == reps - 1
-        d = os.path.join(ctx.work, "sinks" if last else f"scratch-{r}")
-        t = time.time()
-        tables = make(d)
-        times.append(time.time() - t)
-        if not last:
-            shutil.rmtree(d)
-    times.sort()
-    ctx.setup["bootstrap_s"] = times[len(times) // 2]
-    ctx.setup["bootstrap_reps_s"] = times
+def _bootstrap(ctx: Ctx, make):
+    """Create and bootstrap the sinks under ``sinks/``, timed as
+    setup.bootstrap_s."""
+    t = time.time()
+    tables = make(os.path.join(ctx.work, "sinks"))
+    ctx.setup["bootstrap_s"] = time.time() - t
     return tables
 
 
@@ -140,7 +130,7 @@ HASHED = (
 )
 
 BACKFILL_COW = StreamShape(
-    base_rows=20_000, n_buckets=32, chunk=10_000, warm=3, per_second=0.7,
+    base_rows=20_000, n_buckets=32, chunk=10_000, warm=5, per_second=0.5,
     min_timed=4, sinks=(FULL,),
 )
 TAIL_FANOUT = StreamShape(
@@ -179,7 +169,7 @@ def run_stream(ctx: Ctx, name: str, shape: StreamShape) -> Outcome:
             out.append(t)
         return out
 
-    tables = _bootstrap_reps(ctx, make)
+    tables = _bootstrap(ctx, make)
     specs = [
         SinkSpec(name=sname, path=t.path, transforms=tr)
         for (sname, tr, _), t in zip(shape.sinks, tables)
@@ -266,7 +256,7 @@ def mor_serve(ctx: Ctx) -> Outcome:
         bootstrap(t, base)
         return [t]
 
-    (table,) = _bootstrap_reps(ctx, make)
+    (table,) = _bootstrap(ctx, make)
     chunks = wal_files(root)
     cycles, apply_walls, lookup_walls, feed_walls, compact_walls = [], [], [], [], []
     depth, feed_rows, compact_rows, lookup_windows = [], [], [], []
@@ -348,7 +338,7 @@ def mor_serve(ctx: Ctx) -> Outcome:
 # ----------------------------------------------------------------------
 # commit_log
 # ----------------------------------------------------------------------
-COMMIT_LOG = dict(rows=2_048, n_buckets=256, warm=10, rounds=4, per_second=50.0, min_timed=40)
+COMMIT_LOG = dict(rows=2_048, n_buckets=256, warm=10, rounds=8, per_second=100.0, min_timed=40)
 
 
 def commit_log(ctx: Ctx) -> Outcome:
@@ -368,7 +358,7 @@ def commit_log(ctx: Ctx) -> Outcome:
         bootstrap(t, base)
         return [t]
 
-    (template,) = _bootstrap_reps(ctx, make)
+    (template,) = _bootstrap(ctx, make)
     run_id = "commit_log"
     walls, once, meta_added = [], [], 0
     first_timed_at, k, table = None, 0, None
