@@ -92,13 +92,15 @@ def replay_batch_audited(
     earlier epoch published (they passed their own audits)."""
     from pyspark.sql import functions as F
 
-    if n_epochs == 1:
+    lo = hi = None
+    if n_epochs > 1:
+        lo, hi = events.agg(F.min("lsn"), F.max("lsn")).collect()[0]
+    if lo is None:  # one epoch asked for, or nothing to split: one no-op unit
         return [
             apply_batch_audited(
                 spark, table, events, run_id, 0, audit_sql, **apply_kwargs
             )
         ]
-    lo, hi = events.agg(F.min("lsn"), F.max("lsn")).collect()[0]
     span = max((hi - lo + 1) // n_epochs, 1)
     events = events.localCheckpoint(eager=True)
     out = []

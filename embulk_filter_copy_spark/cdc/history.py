@@ -310,19 +310,15 @@ def _recover_sub_lineage(
     table's snapshot history: find the snapshot that FIRST carries the
     (run, epoch, seq) manifest and diff its file list against the previous
     snapshot's — the added files ARE the sub-unit's writes (footer stats
-    included). Resume-only path. Commit lists are CUMULATIVE (every write
-    appends to the prior snapshot's list), so carrier-ship is monotone in
-    the version and the first carrier binary-searches in O(log V) snapshot
-    reads — a linear walk from version 1 would re-parse ~every snapshot of
-    a long-lived store (10^5+ versions) once per resumed sub-unit."""
+    included). Resume-only path. A root's exactly-once index is
+    CUMULATIVE (every write extends the prior root's), so carrier-ship is
+    monotone in the version and the first carrier binary-searches in
+    O(log V) root reads, each a range check on the root's index — a linear
+    walk from version 1 would re-parse ~every root of a long-lived store
+    (10^5+ versions) once per resumed sub-unit."""
 
     def has(v: int) -> bool:
-        return any(
-            c.get("run_id") == run_id
-            and c.get("epoch") == epoch
-            and c.get("seq", 0) == seq
-            for c in table.snapshot_at(v)["commits"]
-        )
+        return table.snapshot_at(v).has_commit(run_id, epoch, seq)
 
     cur = table.current_version()
     if cur < 1 or not has(cur):
@@ -335,10 +331,7 @@ def _recover_sub_lineage(
         else:
             lo = mid + 1
     snap = table.snapshot_at(lo)
-    prev_paths: set[str] = (
-        {f["path"] for f in table.snapshot_at(lo - 1)["files"]} if lo > 1 else set()
-    )
-    added = [f for f in snap["files"] if f["path"] not in prev_paths]
+    added = snap.added_since(table.snapshot_at(lo - 1)) if lo > 1 else snap.files()
     lineage = [
         {"bucket": f["bucket"], "rows": f["rows"],
          "lsn_min": f.get("lsn_min"), "lsn_max": f.get("lsn_max")}

@@ -180,6 +180,23 @@ def cmd_redrive(args) -> None:
     )))
 
 
+def _parse_scalar(text: str, type_: str):
+    """A CLI string as a value of the column's declared scalar type (types
+    Python has no literal for — date, timestamp — stay strings and are cast
+    by the lookup itself)."""
+    type_ = type_.lower()
+    if type_ in ("int", "integer", "long", "bigint"):
+        return int(text)
+    if type_ in ("float", "double"):
+        return float(text)
+    if type_ in ("boolean", "bool"):
+        low = text.lower()
+        if low not in ("true", "false"):
+            raise SystemExit(f"not a boolean: {text!r} (use true or false)")
+        return low == "true"
+    return text
+
+
 def cmd_lookup(args) -> None:
     import json as _json
 
@@ -188,12 +205,12 @@ def cmd_lookup(args) -> None:
     spark = _spark(args)
     t = LakeTable.load(spark, args.table)
     key = dict(kv.split("=", 1) for kv in args.key)
-    # cast string CLI values to each key column's declared type
-    typed = {}
-    for f in t.schema.fields:
-        if f.name in key:
-            v = key[f.name]
-            typed[f.name] = int(v) if f.type in ("int", "long") else v
+    schema = t.snapshot_at(args.version).schema if args.version else t.schema
+    types = {f.name: f.type for f in schema.fields}
+    unknown = sorted(set(key) - set(types))
+    if unknown:
+        raise SystemExit(f"--key names columns not in the table's schema: {unknown}")
+    typed = {c: _parse_scalar(v, types[c]) for c, v in key.items()}
     df = t.lookup(typed, version=args.version)
     rows = [r.asDict() for r in df.limit(args.limit).collect()]
     print(_json.dumps(rows, default=str))

@@ -6,26 +6,30 @@ the way Iceberg does, because the commit-manifest protocol IS the engine's
 exactly-once story (SURVEY.md §7.3: "commit-manifest protocol — the core
 custom piece"):
 
-  * snapshot isolation: an immutable JSON snapshot per version listing data
-    files; readers resolve the current snapshot once and never see partial
-    writes,
-  * atomic commits: a snapshot file is created with O_EXCL (optimistic
-    concurrency — a losing concurrent writer gets ``CommitConflict``) and the
-    CURRENT pointer is swapped with an atomic rename,
+  * snapshot isolation: an immutable JSON root per version referencing
+    immutable manifest chunks (the data files of a fixed bucket range,
+    shared by name until a write touches them) and commit-log segments;
+    readers resolve the current root once and never see partial writes,
+  * atomic commits: new pieces are created first, then the root with O_EXCL
+    (optimistic concurrency — a losing concurrent writer gets
+    ``CommitConflict`` and leaves only unreferenced pieces) and the CURRENT
+    pointer is swapped with an atomic rename,
   * hash-bucket layout: data files are grouped by
     ``pmod(xxhash64(*key_columns), n_buckets)`` so a MERGE rewrites only the
     buckets its batch touches (copy-on-write, like Iceberg CoW) and the
     merge join is co-partitioned by construction,
   * schema evolution by field id (add / rename / type-widen), old files are
     projected to the current schema at read time,
-  * commit metadata: every snapshot carries the (run_id, epoch, seq) commit
-    manifest rows written atomically WITH the data — the direct analogue of
-    the reference's committed-task skip (ReuseInputExecutorPlugin.scala:61-64).
+  * commit metadata: every root carries the (run_id, epoch, seq) commit
+    index (epochs as closed ranges) written atomically WITH the data — the
+    direct analogue of the reference's committed-task skip
+    (ReuseInputExecutorPlugin.scala:61-64); the full commit records live in
+    the root's inline tail and in sealed log segments.
 
 At 100 TB the same layout holds: n_buckets scales to thousands, bucket
-rewrites are independent Spark tasks, and the manifest JSON would move to an
-Avro manifest list — the protocol (O_EXCL snapshot + pointer swap) is
-object-store-compatible (S3 conditional PUT).
+rewrites are independent Spark tasks and touch only their chunks, and the
+JSON pieces could move to Avro manifests — the protocol (O_EXCL pieces and
+root + pointer swap) is object-store-compatible (S3 conditional PUT).
 """
 
 from embulk_filter_copy_spark.lake.schema import Field, TableSchema

@@ -4,8 +4,11 @@ format needs before anyone trusts exactly-once claims in production.
 Two layers:
 
 * **metadata checks** (driver-side, manifest-only — O(files) tiny JSON
-  work, no cluster time): snapshot chain integrity, commit-registry
-  uniqueness, schema-map completeness, data files present on disk;
+  work, no cluster time): every manifest chunk and commit-log segment the
+  root references is present and parses, the root's exactly-once index and
+  LSN high-water mark agree with its commit records, snapshot chain
+  integrity, commit-registry uniqueness, schema-map completeness, data
+  files present on disk;
 * **deep checks** (``deep=True``, one distributed pass over the data,
   grouped by file schema version exactly like the snapshot scanner): per
   file, row counts and ``_lsn`` bounds must match the manifest's
@@ -34,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from embulk_filter_copy_spark.lake.schema import TableSchema, spark_type
-from embulk_filter_copy_spark.lake.table import META_FIELDS, LakeTable
+from embulk_filter_copy_spark.lake.table import META_FIELDS, LakeTable, build_index
 
 
 def fsck(spark: SparkSession, table: LakeTable, deep: bool = True) -> dict:
@@ -46,8 +49,41 @@ def fsck(spark: SparkSession, table: LakeTable, deep: bool = True) -> dict:
         issues.append({"kind": kind, **detail})
 
     # -- metadata layer ---------------------------------------------------
+    # pieces: a missing or unparsable one is reported and skipped, so the
+    # rest of the audit still runs on what loads
+    def load(kind: str, name: str):
+        try:
+            return snap.piece(name)
+        except FileNotFoundError:
+            issue(f"missing_{kind}", name=name)
+        except (OSError, ValueError) as e:
+            issue(f"unparsable_{kind}", name=name, error=str(e))
+        return None
+
+    files: list[dict] = []
+    for _, name in snap.chunk_refs():
+        chunk = load("manifest_chunk", name)
+        if chunk is not None:
+            files += chunk["files"]
+    sealed: list[list[dict]] = []
+    name = snap["log"]["head"]
+    while name is not None:
+        seg = load("log_segment", name)
+        if seg is None:
+            break  # the chain's older segments are unreachable
+        sealed.append(seg["commits"])
+        name = seg["prev"]
+    commits = [c for seg in reversed(sealed) for c in seg] + snap["tail"]
+    if name is None:  # the whole log was readable
+        if build_index(commits) != snap["index"]:
+            issue("index_mismatch", version=snap["version"])
+        lsns = [c["lsn_max"] for c in commits if c.get("lsn_max") is not None]
+        if snap["high_lsn"] != max(lsns, default=None):
+            issue("high_lsn_mismatch", root=snap["high_lsn"],
+                  commits=max(lsns, default=None))
+
     seen: set[tuple] = set()
-    for c in snap["commits"]:
+    for c in commits:
         if "run_id" not in c:
             continue  # maintenance/rollback markers carry no slot
         key = (c.get("run_id"), c.get("epoch"), c.get("seq", 0))
@@ -55,7 +91,7 @@ def fsck(spark: SparkSession, table: LakeTable, deep: bool = True) -> dict:
             issue("duplicate_commit", run_id=key[0], epoch=key[1], seq=key[2])
         seen.add(key)
 
-    for f in snap["files"]:
+    for f in files:
         if str(f["schema_version"]) not in snap["schemas"]:
             issue("missing_schema_version", path=f["path"],
                   schema_version=f["schema_version"])
@@ -79,13 +115,13 @@ def fsck(spark: SparkSession, table: LakeTable, deep: bool = True) -> dict:
             break
         v = table.snapshot_at(v)["parent"]
 
-    checked = {"files": len(snap["files"]), "commits": len(snap["commits"])}
+    checked = {"files": len(files), "commits": len(commits)}
 
     # -- deep layer --------------------------------------------------------
-    if deep and snap["files"]:
+    if deep and files:
         live = {
             f["path"]: f
-            for f in snap["files"]
+            for f in files
             if os.path.exists(os.path.join(table.path, f["path"]))
         }
         # join per-file data stats back to manifest entries by absolute URI

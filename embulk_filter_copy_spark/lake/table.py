@@ -1,20 +1,40 @@
 """LakeTable: snapshot-isolated, hash-bucketed, copy-on-write parquet table.
 
-Layout on disk::
+Layout on disk (metadata format v2)::
 
     <root>/
       _meta/
-        v00000001.json      # immutable snapshot (files, schema versions, commits)
-        v00000002.json
+        v00000001.json      # root snapshot: bucket spec, schemas, piece
+        v00000002.json      #   references, exactly-once index, high-water
+                            #   marks and an inline tail of recent commits
         CURRENT             # text file holding the current version number
+        manifests/m*.json   # immutable manifest chunk: the file entries of
+                            #   CHUNK_BUCKETS consecutive buckets
+        log/s*.json         # immutable commit-log segment: TAIL_COMMITS
+                            #   sealed commits + the previous segment's name
       data/
         c00000002/_bucket=3/part-*.parquet
 
+A commit writes the root plus only the pieces it changes: a data write
+rewrites the chunks holding the buckets it touched and reuses every other
+chunk by name; a commit record joins the root's inline tail, which is
+sealed into a segment once it holds TAIL_COMMITS records. Commit cost
+therefore follows the buckets touched, not the table's file count or the
+length of its history. ``has_commit`` is a range check on the root's
+index: per ``(run_id, seq)``, the committed epochs as closed ranges.
+
 Commit protocol (the exactly-once core, see lake/__init__ docstring):
-  1. build the next snapshot dict in memory,
-  2. create ``v{n+1}.json`` with O_CREAT|O_EXCL — a concurrent committer
+  1. build the next root in memory (pieces it shares are referenced by name),
+  2. create each NEW piece under a fresh unique name with O_CREAT|O_EXCL,
+  3. create ``v{n+1}.json`` with O_CREAT|O_EXCL — a concurrent committer
      racing to the same version loses and gets :class:`CommitConflict`,
-  3. atomically rename a temp file onto ``CURRENT``.
+  4. atomically rename a temp file onto ``CURRENT``.
+Because pieces land before the root, a crash or a losing committer leaves
+only unreferenced pieces (``expire_snapshots(sweep_orphans=True)`` removes
+them after its grace window), never a root that names a missing piece.
+
+Format-v1 roots (one JSON holding every file entry and every commit) still
+load, converted once into the v2 model in memory; the next commit writes v2.
 
 Metadata columns stored in data files alongside the logical schema:
   * ``_lsn``      — last-applied change LSN for the row (the MERGE guard),
@@ -29,10 +49,12 @@ from __future__ import annotations
 import glob
 import json
 import os
-import tempfile
 import time
 import uuid
+from bisect import bisect_right
+from collections.abc import Iterator, Mapping
 from concurrent.futures import ThreadPoolExecutor
+from operator import itemgetter
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -45,7 +67,15 @@ from embulk_filter_copy_spark.lake.schema import (
     spark_type,
 )
 
-FORMAT_VERSION = 1
+FORMAT_VERSION = 2
+# buckets per manifest chunk: a write rewrites only the chunks of the
+# buckets it touches
+CHUNK_BUCKETS = 64
+# commit records kept inline in the root before they are sealed into a
+# commit-log segment
+TAIL_COMMITS = 32
+# piece name prefix → its directory under _meta/
+_PIECE_DIRS = {"m": "manifests", "s": "log"}
 
 # metadata columns carried in every data file, invisible to logical reads
 META_FIELDS: list[tuple[str, str]] = [("_lsn", "long"), ("_deleted", "boolean")]
@@ -56,13 +86,214 @@ class CommitConflict(RuntimeError):
     """A concurrent writer committed the same version first; retry on latest."""
 
 
+def _piece_name(kind: str, version: int) -> str:
+    return f"{kind}{version:08d}-{uuid.uuid4().hex[:12]}.json"
+
+
+def _create_excl(path: str, text: str) -> None:
+    fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    with os.fdopen(fd, "w") as f:
+        f.write(text)
+
+
+def _index_has(index: dict, run_id, epoch, seq) -> bool:
+    ranges = index.get(run_id, {}).get(str(seq))
+    if not ranges:
+        return False
+    i = bisect_right(ranges, int(epoch), key=itemgetter(0))
+    return i > 0 and ranges[i - 1][1] >= epoch
+
+
+def _index_add(index: dict, run_id, epoch, seq) -> dict:
+    """Copy of ``index`` with ``epoch`` in the ``(run_id, seq)`` ranges;
+    only the containers on the path are copied."""
+    epoch = int(epoch)
+    by_seq = index.get(run_id, {})
+    ranges = list(by_seq.get(str(seq), ()))
+    i = bisect_right(ranges, epoch, key=itemgetter(0))
+    if i and ranges[i - 1][1] >= epoch:
+        return index
+    joins_left = i > 0 and ranges[i - 1][1] == epoch - 1
+    joins_right = i < len(ranges) and ranges[i][0] == epoch + 1
+    if joins_left and joins_right:
+        ranges[i - 1 : i + 1] = [[ranges[i - 1][0], ranges[i][1]]]
+    elif joins_left:
+        ranges[i - 1] = [ranges[i - 1][0], epoch]
+    elif joins_right:
+        ranges[i] = [epoch, ranges[i][1]]
+    else:
+        ranges.insert(i, [epoch, epoch])
+    return {**index, run_id: {**by_seq, str(seq): ranges}}
+
+
+def build_index(commits: list[dict]) -> dict:
+    """The exactly-once index a commit list implies (fsck cross-checks it)."""
+    index: dict = {}
+    for c in commits:
+        if c.get("run_id") is not None and c.get("epoch") is not None:
+            index = _index_add(index, c["run_id"], c["epoch"], c.get("seq", 0))
+    return index
+
+
+class Snapshot(Mapping):
+    """One table version: the root's fields, plus the file list and the
+    commit log assembled lazily from the pieces the root references.
+
+    ``snap["files"]`` and ``snap["commits"]`` keep the flat shape of the
+    v1 format; the exactly-once hot path (``has_commit``, ``high_lsn``,
+    ``add_commit``) reads root fields only. A draft (the next version, see
+    ``LakeTable._next_snapshot``) holds its not-yet-written pieces in
+    ``pending``; its mutators replace root containers, never edit them, so
+    a draft shares the parent's containers safely."""
+
+    def __init__(self, table: LakeTable, root: dict, pending: dict | None = None):
+        self.root = root
+        self.pending: dict[str, dict] = pending if pending is not None else {}
+        self._table = table
+        self._files: list[dict] | None = None
+        self._commits: list[dict] | None = None
+
+    def __getitem__(self, key):
+        if key == "files":
+            return self.files()
+        if key == "commits":
+            return self.commits()
+        return self.root[key]
+
+    def __iter__(self):
+        yield from self.root
+        yield from ("files", "commits")
+
+    def __len__(self) -> int:
+        return len(self.root) + 2
+
+    # -- pieces ------------------------------------------------------------
+    def piece(self, name: str) -> dict:
+        body = self.pending.get(name)
+        return body if body is not None else self._table._read_piece(name)
+
+    def chunk_refs(self) -> list[tuple[int, str]]:
+        return sorted((int(ci), name) for ci, name in self.root["chunks"].items())
+
+    def segment_names(self) -> Iterator[str]:
+        """Sealed commit-log segments, newest first."""
+        name = self.root["log"]["head"]
+        while name is not None:
+            yield name
+            name = self.piece(name)["prev"]
+
+    # -- reads -------------------------------------------------------------
+    def files(self, buckets: list[int] | None = None) -> list[dict]:
+        if buckets is None:
+            if self._files is None:
+                self._files = [
+                    f for _, name in self.chunk_refs() for f in self.piece(name)["files"]
+                ]
+            return self._files
+        bset = {int(b) for b in buckets}
+        width = self.root["chunk_buckets"]
+        out = []
+        for ci in sorted({b // width for b in bset}):
+            name = self.root["chunks"].get(str(ci))
+            if name is not None:
+                out += [f for f in self.piece(name)["files"] if f["bucket"] in bset]
+        return out
+
+    def commits(self) -> list[dict]:
+        if self._commits is None:
+            sealed = [self.piece(name)["commits"] for name in self.segment_names()]
+            self._commits = [c for seg in reversed(sealed) for c in seg] + self.root["tail"]
+        return self._commits
+
+    @property
+    def schema(self) -> TableSchema:
+        return TableSchema.from_json(self.root["schemas"][str(self.root["schema_version"])])
+
+    def has_commit(self, run_id: str, epoch: int, seq: int = 0) -> bool:
+        return _index_has(self.root["index"], run_id, epoch, seq)
+
+    def high_lsn(self) -> int:
+        h = self.root["high_lsn"]
+        return 0 if h is None else h
+
+    def added_since(self, old: Snapshot) -> list[dict]:
+        """File entries in this snapshot and not in ``old``. An entry's
+        bucket fixes its chunk, so only chunks whose name differs between
+        the two roots are read and compared."""
+        out = []
+        for ci, name in self.chunk_refs():
+            old_name = old.root["chunks"].get(str(ci))
+            if name == old_name:
+                continue
+            old_paths = (
+                {f["path"] for f in old.piece(old_name)["files"]} if old_name else set()
+            )
+            out += [f for f in self.piece(name)["files"] if f["path"] not in old_paths]
+        return out
+
+    # -- draft mutators ----------------------------------------------------
+    def set_files(
+        self, entries: list[dict], drop_buckets=(), replace_all: bool = False
+    ) -> None:
+        """Drop the entries of ``drop_buckets`` (or every entry), add
+        ``entries``, and stage a new chunk for each chunk that changed."""
+        width = self.root["chunk_buckets"]
+        chunks = {} if replace_all else dict(self.root["chunks"])
+        drop = {int(b) for b in drop_buckets}
+        new_by_ci: dict[int, list[dict]] = {}
+        for e in entries:
+            new_by_ci.setdefault(e["bucket"] // width, []).append(e)
+        for ci in sorted({b // width for b in drop} | set(new_by_ci)):
+            old_name = chunks.get(str(ci))
+            old = self.piece(old_name)["files"] if old_name else []
+            kept = [f for f in old if f["bucket"] not in drop]
+            if len(kept) == len(old) and ci not in new_by_ci:
+                continue  # nothing of this chunk changed
+            files = kept + new_by_ci.get(ci, [])
+            if files:
+                name = _piece_name("m", self.root["version"])
+                self.pending[name] = {"chunk": ci, "files": files}
+                chunks[str(ci)] = name
+            else:
+                chunks.pop(str(ci), None)
+        self.root["chunks"] = chunks
+        self._files = None
+
+    def append_commit(self, commit: dict, stamp: bool = True) -> None:
+        """Add a commit record to the tail (sealing a full tail into a new
+        segment first) and fold it into the index and high-water marks."""
+        root = self.root
+        rec = dict(commit, committed_at=time.time()) if stamp else commit
+        tail = root["tail"]
+        if len(tail) >= TAIL_COMMITS:
+            name = _piece_name("s", root["version"])
+            self.pending[name] = {"prev": root["log"]["head"], "commits": tail}
+            root["log"] = {"head": name, "sealed": root["log"]["sealed"] + len(tail)}
+            tail = []
+        root["tail"] = tail + [rec]
+        if rec.get("run_id") is not None and rec.get("epoch") is not None:
+            root["index"] = _index_add(root["index"], rec["run_id"], rec["epoch"], rec.get("seq", 0))
+        for field, src in (("high_lsn", "lsn_max"), ("high_ts", "ts_max")):
+            if rec.get(src) is not None:
+                cur = root[field]
+                root[field] = rec[src] if cur is None else max(cur, rec[src])
+        if rec.get("purged_tombstones"):
+            root["purge_version"] = root["version"]
+        if rec.get("kind") == "rollback":
+            root["rollbacks"] = root["rollbacks"] + [
+                {k: rec[k] for k in ("rollback_to", "rolled_back_from", "at_version")}
+            ]
+        self._commits = None
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = os.path.abspath(path)
         self._meta_dir = os.path.join(self.path, "_meta")
-        self._snap_cache: dict | None = None
-        self._snap_cache_version: int | None = None
+        self._current: Snapshot | None = None
+        # immutable pieces by name, filled on first read of each
+        self._pieces: dict[str, dict] = {}
 
     # ------------------------------------------------------------------
     # creation / loading
@@ -100,21 +331,35 @@ class LakeTable:
         t = cls(spark, path)
         os.makedirs(t._meta_dir, exist_ok=False)
         os.makedirs(os.path.join(t.path, "data"), exist_ok=True)
-        snap = {
-            "format_version": FORMAT_VERSION,
-            "version": 1,
-            "parent": None,
-            "key_columns": list(key_columns),
-            "bucket_columns": list(bucket_columns) if bucket_columns else list(key_columns),
-            "n_buckets": int(n_buckets),
-            "schema_version": 1,
-            "schemas": {"1": schema.to_json()},
-            "schema_lsn": -1,
-            "files": [],
-            "commits": [],
-        }
-        t._write_snapshot(snap)
+        root = cls._new_root(
+            version=1,
+            parent=None,
+            key_columns=list(key_columns),
+            bucket_columns=list(bucket_columns) if bucket_columns else list(key_columns),
+            n_buckets=int(n_buckets),
+            schema_version=1,
+            schemas={"1": schema.to_json()},
+            schema_lsn=-1,
+        )
+        t._write_snapshot(Snapshot(t, root))
         return t
+
+    @staticmethod
+    def _new_root(**fields) -> dict:
+        """A v2 root with no files and no commits, plus ``fields``."""
+        return {
+            "format_version": FORMAT_VERSION,
+            **fields,
+            "chunk_buckets": CHUNK_BUCKETS,
+            "chunks": {},
+            "log": {"head": None, "sealed": 0},
+            "tail": [],
+            "index": {},
+            "high_lsn": None,
+            "high_ts": None,
+            "purge_version": None,
+            "rollbacks": [],
+        }
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> LakeTable:
@@ -133,50 +378,113 @@ class LakeTable:
         with open(os.path.join(self._meta_dir, "CURRENT")) as f:
             return int(f.read().strip())
 
-    def snapshot(self) -> dict:
+    def _root_path(self, version: int) -> str:
+        return os.path.join(self._meta_dir, f"v{version:08d}.json")
+
+    def piece_path(self, name: str) -> str:
+        return os.path.join(self._meta_dir, _PIECE_DIRS[name[0]], name)
+
+    def _read_piece(self, name: str) -> dict:
+        body = self._pieces.get(name)
+        if body is None:
+            with open(self.piece_path(name)) as f:
+                body = json.load(f)
+            self._pieces[name] = body
+        return body
+
+    def _read_root(self, version: int) -> Snapshot:
+        with open(self._root_path(version)) as f:
+            root = json.load(f)
+        if root.get("format_version", 1) < 2:
+            return self._from_v1(root)
+        return Snapshot(self, root)
+
+    def _from_v1(self, old: dict) -> Snapshot:
+        """Convert a format-v1 root (every file entry and every commit
+        inline) into the v2 model. Its chunks and segments stay pending in
+        memory and are written by the next commit built on it."""
+        root = self._new_root(
+            version=old["version"],
+            parent=old["parent"],
+            key_columns=old["key_columns"],
+            # tables created before the option existed bucket by the full key
+            bucket_columns=old.get("bucket_columns") or old["key_columns"],
+            n_buckets=old["n_buckets"],
+            schema_version=old["schema_version"],
+            schemas=old["schemas"],
+            schema_lsn=old["schema_lsn"],
+        )
+        snap = Snapshot(self, root)
+        snap.set_files(old["files"], replace_all=True)
+        for c in old["commits"]:
+            snap.append_commit(c, stamp=False)
+        # v1 records no commit's version; a purging compaction records the
+        # version it started from and commits the next one
+        root["purge_version"] = max(
+            (c["epoch"] + 1 for c in old["commits"] if c.get("purged_tombstones")),
+            default=None,
+        )
+        return snap
+
+    def snapshot(self) -> Snapshot:
         v = self.current_version()
-        if self._snap_cache_version != v:
-            with open(os.path.join(self._meta_dir, f"v{v:08d}.json")) as f:
-                self._snap_cache = json.load(f)
-            self._snap_cache_version = v
-        return self._snap_cache
+        if self._current is None or self._current.root["version"] != v:
+            self._current = self._read_root(v)
+        return self._current
 
-    def snapshot_at(self, version: int) -> dict:
+    def snapshot_at(self, version: int) -> Snapshot:
         """Any historical snapshot — they are immutable (time travel)."""
-        if version == self._snap_cache_version:
-            return self._snap_cache
-        with open(os.path.join(self._meta_dir, f"v{version:08d}.json")) as f:
-            return json.load(f)
+        if self._current is not None and self._current.root["version"] == version:
+            return self._current
+        return self._read_root(version)
 
-    def _write_snapshot(self, snap: dict) -> None:
-        v = snap["version"]
-        snap_path = os.path.join(self._meta_dir, f"v{v:08d}.json")
+    def _write_snapshot(self, snap: Snapshot) -> None:
+        root = snap.root
+        v = root["version"]
+        # pieces first, so no root ever names a piece that is not on disk
+        live = set(root["chunks"].values())
+        name = root["log"]["head"]
+        while name in snap.pending:
+            live.add(name)
+            name = snap.pending[name]["prev"]
+        written = {n: body for n, body in snap.pending.items() if n in live}
+        for n, body in written.items():
+            path = self.piece_path(n)
+            os.makedirs(os.path.dirname(path), exist_ok=True)
+            try:
+                _create_excl(path, json.dumps(body, separators=(",", ":")))
+            except FileExistsError:
+                pass  # names are unique: a sibling draft of one v1 load wrote it
         try:
-            fd = os.open(snap_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            _create_excl(self._root_path(v), json.dumps(root, separators=(",", ":")))
         except FileExistsError as e:
             raise CommitConflict(f"version {v} already committed at {self.path}") from e
-        with os.fdopen(fd, "w") as f:
-            json.dump(snap, f)
         tmp = os.path.join(self._meta_dir, f".CURRENT.{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             f.write(str(v))
         os.rename(tmp, os.path.join(self._meta_dir, "CURRENT"))
-        self._snap_cache = snap
-        self._snap_cache_version = v
+        if any(n.startswith("m") for n in written):
+            # chunks churn with data writes: keep only the live ones cached
+            for n in list(self._pieces):
+                if n.startswith("m") and n not in live:
+                    self._pieces.pop(n, None)
+        self._pieces.update(written)
+        snap.pending = {}
+        self._current = snap
 
-    def _next_snapshot(self) -> dict:
-        snap = json.loads(json.dumps(self.snapshot()))  # deep copy
-        snap["parent"] = snap["version"]
-        snap["version"] += 1
-        return snap
+    def _next_snapshot(self) -> Snapshot:
+        """Draft of the next version: a shallow copy of the current root
+        (no deep copy — the draft's mutators replace containers)."""
+        cur = self.snapshot()
+        v = cur.root["version"]
+        return Snapshot(self, dict(cur.root, version=v + 1, parent=v), dict(cur.pending))
 
     # ------------------------------------------------------------------
     # schema accessors
     # ------------------------------------------------------------------
     @property
     def schema(self) -> TableSchema:
-        snap = self.snapshot()
-        return TableSchema.from_json(snap["schemas"][str(snap["schema_version"])])
+        return self.snapshot().schema
 
     def schema_at(self, version: int) -> TableSchema:
         return TableSchema.from_json(self.snapshot()["schemas"][str(version)])
@@ -187,8 +495,7 @@ class LakeTable:
 
     @property
     def bucket_columns(self) -> list[str]:
-        # tables created before the option existed bucket by the full key
-        return list(self.snapshot().get("bucket_columns") or self.snapshot()["key_columns"])
+        return list(self.snapshot()["bucket_columns"])
 
     @property
     def n_buckets(self) -> int:
@@ -216,11 +523,7 @@ class LakeTable:
     # reads
     # ------------------------------------------------------------------
     def files(self, buckets: list[int] | None = None) -> list[dict]:
-        fs = self.snapshot()["files"]
-        if buckets is not None:
-            bset = set(buckets)
-            fs = [f for f in fs if f["bucket"] in bset]
-        return fs
+        return self.snapshot().files(buckets)
 
     def _empty_df(self, include_meta: bool, schema: TableSchema | None = None) -> DataFrame:
         struct = (schema or self.schema).to_struct()
@@ -251,11 +554,8 @@ class LakeTable:
         metadata columns and tombstones.
         """
         snap = self.snapshot() if version is None else self.snapshot_at(version)
-        files = snap["files"]
-        if buckets is not None:
-            bset = set(buckets)
-            files = [f for f in files if f["bucket"] in bset]
-        cur = TableSchema.from_json(snap["schemas"][str(snap["schema_version"])])
+        files = snap.files(buckets)
+        cur = snap.schema
         key_columns = snap["key_columns"]
         if stat_filter is not None:
             # manifest-level range pruning over the per-file col_stats a
@@ -353,24 +653,31 @@ class LakeTable:
         matter the table size, the read-side payoff of hash-bucketed
         layout. ``key_values`` must cover at least the bucket columns;
         extra key columns tighten the filter. Equality-only (the bucket
-        function is a hash)."""
+        function is a hash).
+
+        Each literal is cast to the column's type in the pinned snapshot
+        before hashing: ``xxhash64`` of an int literal differs from that of
+        the same value as a long, so an uncast ``7`` would pick the wrong
+        bucket of a ``long`` key."""
         snap = self.snapshot() if version is None else self.snapshot_at(version)
-        bcols = snap.get("bucket_columns") or snap["key_columns"]
+        schema = snap.schema
+        bcols = snap["bucket_columns"]
         missing = [c for c in bcols if c not in key_values]
         if missing:
             raise ValueError(
                 f"lookup needs every bucket column; missing: {missing}"
             )
+
+        def lit(c):
+            return F.lit(key_values[c]).cast(spark_type(schema.field(c).type))
+
         one = self.spark.range(1).select(
-            F.pmod(
-                F.xxhash64(*[F.lit(key_values[c]) for c in bcols]),
-                F.lit(snap["n_buckets"]),
-            ).alias("b")
+            F.pmod(F.xxhash64(*[lit(c) for c in bcols]), F.lit(snap["n_buckets"])).alias("b")
         )
         bucket = int(one.first()["b"])
         df = self.read(buckets=[bucket], version=version)
-        for c, v in key_values.items():
-            df = df.filter(F.col(c) == F.lit(v))
+        for c in key_values:
+            df = df.filter(F.col(c) == lit(c))
         return df
 
     def high_lsn(self, version: int | None = None) -> int:
@@ -380,20 +687,14 @@ class LakeTable:
         starts at the snapshot position; maintenance commits carry no
         LSN)."""
         snap = self.snapshot() if version is None else self.snapshot_at(version)
-        return max(
-            (c["lsn_max"] for c in snap["commits"] if c.get("lsn_max") is not None),
-            default=0,
-        )
+        return snap.high_lsn()
 
     def high_ts(self, version: int | None = None) -> float | None:
         """Highest event time (epoch seconds) covered by a snapshot's commit
         manifests — the stream-level late-data high-water mark the
         quarantine threshold advances against."""
         snap = self.snapshot() if version is None else self.snapshot_at(version)
-        return max(
-            (c["ts_max"] for c in snap["commits"] if c.get("ts_max") is not None),
-            default=None,
-        )
+        return snap["high_ts"]
 
     def read_changes(self, since_version: int, version: int | None = None) -> DataFrame:
         """Incremental change scan: the net per-key changes committed AFTER
@@ -429,33 +730,15 @@ class LakeTable:
         cur_version = self.current_version() if version is None else int(version)
         cur_snap = self.snapshot_at(cur_version)
         old = self.snapshot_at(since_version)
-        old_paths = {f["path"] for f in old["files"]}
-        wm_prune = self.high_lsn(since_version)
-        # manifest-level data skipping: a file added since the old snapshot
-        # whose footer-derived lsn_max is at or below the old watermark can
-        # only contain re-added rows (copy-on-write rewrites, compactions) —
-        # skip it entirely instead of scanning and filtering. Files with
-        # unknown stats stay in (safe), the row-level _lsn filter below is
-        # still the correctness gate either way.
-        added = [
-            f
-            for f in cur_snap["files"]
-            if f["path"] not in old_paths
-            and (f.get("lsn_max") is None or f["lsn_max"] > wm_prune)
-        ]
+        added = self._added_after(old, cur_snap)
         # a rollback between the snapshots REWOUND state the consumer has
         # already seen — net-change semantics cannot represent un-happening,
         # so raise (the latest crossing rollback's marker is always present:
         # markers are only removed by a rollback to an even earlier version,
         # which leaves its own, later marker). Checked BEFORE the purge
-        # guard below, whose commit-suffix slice assumes the commit list is
-        # append-only — exactly what a rollback's truncation breaks.
-        rb = [
-            c
-            for c in cur_snap["commits"]
-            if c.get("kind") == "rollback"
-            and c.get("at_version", 0) > since_version
-        ]
+        # guard below, whose root marker a rollback restores to the
+        # target's.
+        rb = [m for m in cur_snap["rollbacks"] if m["at_version"] > since_version]
         if rb:
             raise ValueError(
                 f"read_changes(since_version={since_version}): the table was "
@@ -466,14 +749,9 @@ class LakeTable:
         # a tombstone-purging compaction between the snapshots has DROPPED
         # delete markers this feed would otherwise emit as 'D' events —
         # surfacing silently-lossy feeds as an error beats returning one
-        # (commits are append-only across snapshots, so the new ones are
-        # exactly the suffix past the old count)
-        purged = [
-            c
-            for c in cur_snap["commits"][len(old["commits"]):]
-            if c.get("purged_tombstones")
-        ]
-        if purged:
+        # (the root records the version of the last purge in its lineage)
+        purged = cur_snap["purge_version"]
+        if purged is not None and purged > since_version:
             raise ValueError(
                 f"read_changes(since_version={since_version}): a tombstone-"
                 "purging compaction committed after that version; delete "
@@ -484,10 +762,8 @@ class LakeTable:
         # columns from the PINNED snapshot everywhere (including the empty
         # branch — self.schema would re-read CURRENT and could race a
         # concurrent schema-evolving commit)
-        pinned_schema = TableSchema.from_json(
-            cur_snap["schemas"][str(cur_snap["schema_version"])]
-        )
-        wm = wm_prune
+        pinned_schema = cur_snap.schema
+        wm = old.high_lsn()
         if not added:
             base = self._empty_df(include_meta=True, schema=pinned_schema)
         else:
@@ -507,6 +783,20 @@ class LakeTable:
             *[F.col(c) for c in cols],
             F.lit(None).cast("string").alias("schema_change"),
         )
+
+    @staticmethod
+    def _added_after(old: Snapshot, cur: Snapshot) -> list[dict]:
+        """Files in ``cur`` and not in ``old`` that may hold rows above the
+        old watermark. A file whose footer-derived lsn_max is at or below
+        it can only contain re-added rows (copy-on-write rewrites,
+        compactions) and is skipped unscanned; files with unknown stats stay
+        in (safe) — the row-level ``_lsn`` filter is still the correctness
+        gate either way."""
+        wm = old.high_lsn()
+        return [
+            f for f in cur.added_since(old)
+            if f.get("lsn_max") is None or f["lsn_max"] > wm
+        ]
 
     def changelog(self, since_version: int, version: int | None = None) -> DataFrame:
         """Pre/post-image changelog between a past snapshot and now — the
@@ -530,30 +820,31 @@ class LakeTable:
 
         ``version`` pins the END of the window (default: current) — the
         changelog between any two historical snapshots, for audit replay.
+        Raises ValueError when the bucket spec (count or columns) differs
+        between the two ends: the before-image bucket ids would be wrong.
         """
         cur_version = self.current_version() if version is None else int(version)
         cur_snap = self.snapshot_at(cur_version)
-        changes = self.read_changes(since_version, version=cur_version)
         old_snap = self.snapshot_at(since_version)
+        # the before-image buckets below are the END spec's; read under a
+        # different START spec they would miss the key's old row and turn
+        # an update into an insert — refuse, the caller rebuilds instead
+        spec = [(s["n_buckets"], s["bucket_columns"]) for s in (old_snap, cur_snap)]
+        if spec[0] != spec[1]:
+            raise ValueError(
+                f"changelog(since_version={since_version}): the bucket spec "
+                f"changed inside the window ({spec[0]} -> {spec[1]}); "
+                "rebuild from a full read at the end version."
+            )
+        changes = self.read_changes(since_version, version=cur_version)
         # same manifest diff read_changes prunes with: buckets untouched
         # since the old snapshot cannot hold a changed key's before-image
-        wm = self.high_lsn(since_version)
-        old_paths = {f["path"] for f in old_snap["files"]}
         bset = sorted(
-            {
-                f["bucket"]
-                for f in cur_snap["files"]
-                if f["path"] not in old_paths
-                and (f.get("lsn_max") is None or f["lsn_max"] > wm)
-            }
+            {f["bucket"] for f in self._added_after(old_snap, cur_snap)}
         )
         before = self.read(buckets=bset, version=since_version)
-        cur_schema = TableSchema.from_json(
-            cur_snap["schemas"][str(cur_snap["schema_version"])]
-        )
-        old_schema = TableSchema.from_json(
-            old_snap["schemas"][str(old_snap["schema_version"])]
-        )
+        cur_schema = cur_snap.schema
+        old_schema = old_snap.schema
         proj = []
         for cf in cur_schema.fields:
             of = old_schema.field_by_id(cf.id)
@@ -745,10 +1036,9 @@ class LakeTable:
     def append(self, df: DataFrame, commit: dict | None = None) -> dict:
         snap = self._next_snapshot()
         entries = self._write_data_files(df, f"c{snap['version']:08d}-{uuid.uuid4().hex[:8]}")
-        snap["files"] = snap["files"] + entries
+        snap.set_files(entries)
         if commit:
-            commit = self._fill_lsn_bounds(commit, entries)
-            snap["commits"] = snap["commits"] + [dict(commit, committed_at=time.time())]
+            snap.append_commit(self._fill_lsn_bounds(commit, entries))
         self._write_snapshot(snap)
         return {"files_added": len(entries), "rows": sum(e["rows"] for e in entries),
                 "entries": entries}
@@ -780,10 +1070,9 @@ class LakeTable:
         entries = self._write_data_files(
             df, f"d{snap['version']:08d}-{uuid.uuid4().hex[:8]}", kind="delta"
         )
-        snap["files"] = snap["files"] + entries
+        snap.set_files(entries)
         if commit:
-            commit = self._fill_lsn_bounds(commit, entries)
-            snap["commits"] = snap["commits"] + [dict(commit, committed_at=time.time())]
+            snap.append_commit(self._fill_lsn_bounds(commit, entries))
         self._write_snapshot(snap)
         return {"files_added": len(entries), "rows": sum(e["rows"] for e in entries)}
 
@@ -805,10 +1094,9 @@ class LakeTable:
         bad = [e for e in entries if e["bucket"] not in bset]
         if bad:
             raise ValueError(f"write produced rows outside affected buckets: {bad[:3]}")
-        kept = [f for f in snap["files"] if f["bucket"] not in bset]
-        snap["files"] = kept + entries
+        snap.set_files(entries, drop_buckets=bset)
         if commit:
-            snap["commits"] = snap["commits"] + [dict(commit, committed_at=time.time())]
+            snap.append_commit(commit)
         self._write_snapshot(snap)
         return {
             "files_added": len(entries),
@@ -837,13 +1125,13 @@ class LakeTable:
                     "identity and physical placement depend on it"
                 )
         snap = self._next_snapshot()
-        cur = TableSchema.from_json(snap["schemas"][str(snap["schema_version"])])
-        new = cur.apply_change(change)
-        snap["schema_version"] += 1
-        snap["schemas"][str(snap["schema_version"])] = new.to_json()
-        snap["schema_lsn"] = int(schema_lsn)
+        root = snap.root
+        new = snap.schema.apply_change(change)
+        root["schema_version"] += 1
+        root["schemas"] = {**root["schemas"], str(root["schema_version"]): new.to_json()}
+        root["schema_lsn"] = int(schema_lsn)
         if commit:
-            snap["commits"] = snap["commits"] + [dict(commit, committed_at=time.time())]
+            snap.append_commit(commit)
         self._write_snapshot(snap)
         return True
 
@@ -851,21 +1139,21 @@ class LakeTable:
     # commit manifests (exactly-once)
     # ------------------------------------------------------------------
     def commits(self) -> list[dict]:
-        return list(self.snapshot()["commits"])
+        """Every commit record, oldest first (reads every log segment)."""
+        return list(self.snapshot().commits())
 
     def add_commit(self, commit: dict) -> None:
-        """Metadata-only commit (e.g. an epoch-done marker): no data change."""
+        """Metadata-only commit (e.g. an epoch-done marker): no data change.
+        Writes the root only, plus one segment each time the tail fills."""
         snap = self._next_snapshot()
-        snap["commits"] = snap["commits"] + [dict(commit, committed_at=time.time())]
+        snap.append_commit(commit)
         self._write_snapshot(snap)
 
     def has_commit(self, run_id: str, epoch: int, seq: int = 0) -> bool:
         """Reference parity: committed tasks are skipped on resume
-        (ReuseInputExecutorPlugin.scala:61-64, LoaderState.scala:111-120)."""
-        for c in self.snapshot()["commits"]:
-            if c.get("run_id") == run_id and c.get("epoch") == epoch and c.get("seq", 0) == seq:
-                return True
-        return False
+        (ReuseInputExecutorPlugin.scala:61-64, LoaderState.scala:111-120).
+        A range check on the root's exactly-once index."""
+        return self.snapshot().has_commit(run_id, epoch, seq)
 
     # ------------------------------------------------------------------
     # maintenance
@@ -992,24 +1280,22 @@ class LakeTable:
             n_buckets=new_n_buckets,
             bucket_columns=new_bucket_columns,
         )
-        snap["n_buckets"] = new_n_buckets
+        root = snap.root
+        root["n_buckets"] = new_n_buckets
         if new_bucket_columns is not None:
-            snap["bucket_columns"] = list(new_bucket_columns)
-        snap["files"] = entries  # full replacement — every row was rewritten
-        snap["commits"] = snap["commits"] + [
-            {
-                "run_id": "__rescale__",
-                "epoch": snap["version"],
-                "seq": 0,
-                "n_buckets": new_n_buckets,
-                "bucket_columns": snap.get("bucket_columns"),
-                "committed_at": time.time(),
-            }
-        ]
+            root["bucket_columns"] = list(new_bucket_columns)
+        snap.set_files(entries, replace_all=True)  # every row was rewritten
+        snap.append_commit({
+            "run_id": "__rescale__",
+            "epoch": root["version"],
+            "seq": 0,
+            "n_buckets": new_n_buckets,
+            "bucket_columns": root["bucket_columns"],
+        })
         self._write_snapshot(snap)
         return {
             "n_buckets": new_n_buckets,
-            "bucket_columns": list(snap.get("bucket_columns") or self.key_columns),
+            "bucket_columns": list(snap["bucket_columns"]),
             "files": len(entries),
             "rows": sum(e["rows"] for e in entries),
         }
@@ -1033,11 +1319,16 @@ class LakeTable:
         still-listed snapshot pointing at deleted files (which would break
         time travel to a listed version until a rerun).
 
+        Metadata pieces follow the same rule: a manifest chunk or log
+        segment that only expired roots reference is deleted with them.
+
         ``sweep_orphans`` additionally scans ``data/`` for files referenced
         by NO surviving snapshot — the leftovers of aborted commits
         (``_write_data_files`` runs before ``_write_snapshot``, so a
         CommitConflict loser's files are invisible to reference-diff GC) and
-        of crashes inside this method. Only files older than
+        of crashes inside this method — and ``_meta/`` for pieces no
+        surviving root references (a crash or a losing committer writes its
+        pieces before its root). Only files older than
         ``orphan_grace_seconds`` (mtime) are swept, so an IN-FLIGHT writer's
         not-yet-committed files are never deleted — same grace-window
         contract as Iceberg's remove_orphan_files.
@@ -1046,65 +1337,99 @@ class LakeTable:
         (``read_changes(since_version=...)``) below the horizon raise
         FileNotFoundError afterwards — run expiration only once every
         consumer's resume point has passed the horizon, same contract as
-        tombstone purging. Commit manifests are unaffected (each snapshot
-        carries the full append-only commit list, so exactly-once resume
-        never needs expired snapshots)."""
+        tombstone purging. Exactly-once resume is unaffected: the current
+        root's index answers ``has_commit`` and its log segments are kept."""
         if keep_last < 1:
             # keep_last=0 would place the horizon past CURRENT and delete
             # the live snapshot + every data file — refuse, don't truncate
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         cur = self.current_version()
         horizon = cur - keep_last + 1  # keep [horizon .. cur]
-        deleted = 0
-        expired_versions: list[int] = []
+        expired: list[Snapshot] = []
+        deleted = pieces_deleted = 0
         if horizon > 1:
-            kept_refs: set[str] = set()
-            for v in range(horizon, cur + 1):
-                kept_refs |= {f["path"] for f in self.snapshot_at(v)["files"]}
-            orphan_refs: set[str] = set()
-            for v in range(1, horizon):
-                snap_path = os.path.join(self._meta_dir, f"v{v:08d}.json")
-                if not os.path.exists(snap_path):
-                    continue  # already expired by an earlier run (idempotent)
-                expired_versions.append(v)
-                orphan_refs |= {
-                    f["path"] for f in self.snapshot_at(v)["files"]
-                } - kept_refs
+            kept = [self.snapshot_at(v) for v in range(horizon, cur + 1)]
+            expired = [
+                self.snapshot_at(v) for v in range(1, horizon)
+                # already expired by an earlier run (idempotent)
+                if os.path.exists(self._root_path(v))
+            ]
+            kept_chunks, kept_refs = self._chunks_of(kept)
+            dead_chunks, dead_refs = self._chunks_of(expired, skip=kept_chunks)
+            dead_pieces = dead_chunks | self._segments_of(
+                expired, stop=self._segments_of(kept)
+            )
             # metadata first (see docstring ordering contract)
-            for v in expired_versions:
-                os.remove(os.path.join(self._meta_dir, f"v{v:08d}.json"))
-            for rel in sorted(orphan_refs):
-                p = os.path.join(self.path, rel)
-                if os.path.exists(p):
-                    os.remove(p)
-                    deleted += 1
-        swept = 0
+            for s in expired:
+                os.remove(self._root_path(s["version"]))
+            for name in dead_pieces:
+                pieces_deleted += self._remove(self.piece_path(name))
+            for rel in sorted(dead_refs - kept_refs):
+                deleted += self._remove(os.path.join(self.path, rel))
+        swept = pieces_swept = 0
         if sweep_orphans:
-            live_refs: set[str] = set()
-            for name in os.listdir(self._meta_dir):
-                if name.startswith("v") and name.endswith(".json"):
-                    with open(os.path.join(self._meta_dir, name)) as f:
-                        live_refs |= {x["path"] for x in json.load(f)["files"]}
-            now = time.time()
+            live = [
+                self.snapshot_at(int(name[1:-5]))
+                for name in os.listdir(self._meta_dir)
+                if name.startswith("v") and name.endswith(".json")
+            ]
+            live_chunks, live_refs = self._chunks_of(live)
+            live_pieces = live_chunks | self._segments_of(live)
+            cutoff = time.time() - orphan_grace_seconds
             for p in glob.glob(
                 os.path.join(self.path, "data", "*", "_bucket=*", "*.parquet")
             ):
-                rel = os.path.relpath(p, self.path)
-                if rel in live_refs:
-                    continue
-                try:
-                    if now - os.path.getmtime(p) < orphan_grace_seconds:
-                        continue  # possibly an in-flight commit's file
-                    os.remove(p)
-                    swept += 1
-                except FileNotFoundError:
-                    pass  # concurrent cleanup
+                if os.path.relpath(p, self.path) not in live_refs:
+                    swept += self._remove(p, cutoff)
+            for d in _PIECE_DIRS.values():
+                for p in glob.glob(os.path.join(self._meta_dir, d, "*.json")):
+                    if os.path.basename(p) not in live_pieces:
+                        pieces_swept += self._remove(p, cutoff)
         return {
-            "snapshots_expired": len(expired_versions),
+            "snapshots_expired": len(expired),
             "files_deleted": deleted,
+            "pieces_deleted": pieces_deleted,
             "orphans_swept": swept,
+            "pieces_swept": pieces_swept,
             "horizon": horizon,
         }
+
+    @staticmethod
+    def _remove(path: str, older_than: float | None = None) -> int:
+        """Delete ``path`` (only if its mtime is before ``older_than``, when
+        given — an in-flight commit's file is young); 1 if deleted."""
+        try:
+            if older_than is not None and os.path.getmtime(path) >= older_than:
+                return 0
+            os.remove(path)
+            return 1
+        except FileNotFoundError:
+            return 0  # never written (a v1 root's pending piece) or concurrent cleanup
+
+    @staticmethod
+    def _chunks_of(snaps: list[Snapshot], skip=frozenset()) -> tuple[set[str], set[str]]:
+        """Names of the chunks the snapshots reference (except ``skip``)
+        and the data paths those chunks list; each chunk is read once."""
+        names: set[str] = set()
+        paths: set[str] = set()
+        for s in snaps:
+            for _, name in s.chunk_refs():
+                if name not in names and name not in skip:
+                    names.add(name)
+                    paths.update(f["path"] for f in s.piece(name)["files"])
+        return names, paths
+
+    @staticmethod
+    def _segments_of(snaps: list[Snapshot], stop=frozenset()) -> set[str]:
+        """Log segments reachable from the snapshots' heads. A walk ends at
+        a segment already seen or in ``stop``: its ancestors are too."""
+        seen: set[str] = set()
+        for s in snaps:
+            for name in s.segment_names():
+                if name in seen or name in stop:
+                    break
+                seen.add(name)
+        return seen
 
     def rollback(self, to_version: int) -> dict:
         """Non-destructive rollback (the Iceberg ``rollback_to_snapshot``
@@ -1115,10 +1440,13 @@ class LakeTable:
         target stay on disk (still referenced by the pre-rollback
         snapshots) until ``expire_snapshots`` ages them out.
 
-        The commit-manifest list is RESTORED to the target's list plus one
-        ``kind='rollback'`` marker. The manifests are both the exactly-once
-        registry and the LSN high-water mark, so keeping post-target
-        manifests would make a resumed replay SKIP the very epochs the
+        A pointer operation: the new root takes the target's manifest chunks,
+        commit log, exactly-once index and high-water marks, so the commit
+        list is RESTORED to the target's list plus one ``kind='rollback'``
+        marker. The commit records (and the root's index and marks built
+        from them) are both the exactly-once registry and the LSN high-water
+        mark, so keeping post-target records would make a resumed replay
+        SKIP the very epochs the
         rollback undid (``has_commit`` hits, ``high_lsn`` stays high —
         permanent data loss); truncating them re-opens those (run, epoch)
         slots and regresses the watermark, so the corrected WAL range
@@ -1139,21 +1467,17 @@ class LakeTable:
             )
         target = self.snapshot_at(to_version)  # raises if expired
         snap = self._next_snapshot()
-        for k in ("files", "schema_version", "schemas", "schema_lsn",
-                  "n_buckets", "key_columns"):
-            snap[k] = target[k]
-        snap["bucket_columns"] = (
-            target.get("bucket_columns") or target["key_columns"]
-        )
-        snap["commits"] = list(target["commits"]) + [
-            {
-                "kind": "rollback",
-                "rollback_to": int(to_version),
-                "rolled_back_from": cur,
-                "at_version": snap["version"],
-                "committed_at": time.time(),
-            }
-        ]
+        # pointer operation: the target's pieces, index and marks, with the
+        # target's unwritten pieces (a v1 target) carried along
+        version, parent = snap.root["version"], snap.root["parent"]
+        snap.root = dict(target.root, version=version, parent=parent)
+        snap.pending = dict(target.pending)
+        snap.append_commit({
+            "kind": "rollback",
+            "rollback_to": int(to_version),
+            "rolled_back_from": cur,
+            "at_version": version,
+        })
         self._write_snapshot(snap)
         return {
             "rolled_back_to": int(to_version),
@@ -1167,4 +1491,4 @@ class LakeTable:
     # ------------------------------------------------------------------
     def row_count(self) -> int:
         """Physical row count from manifest stats (includes tombstones)."""
-        return sum(f["rows"] for f in self.snapshot()["files"])
+        return sum(f["rows"] for f in self.files())

@@ -148,6 +148,19 @@ def test_refresh_rebuilds_when_feed_refuses_the_gap(spark, tmpdir_path):
     assert _view(spark, vp) == _direct(t)
 
 
+def test_refresh_rebuilds_across_a_bucket_spec_change(spark, tmpdir_path):
+    t = _mk(spark, os.path.join(tmpdir_path, "t"))
+    vp = os.path.join(tmpdir_path, "view")
+    apply_batch(t, _ev(spark, [(1, "I", 1, "a", 1.0), (2, "I", 2, "b", 2.0)]),
+                run_id="av", epoch=0)
+    build_agg_view(spark, t, vp, group_cols=["grp"], sum_cols=["x"])
+    t.rescale_buckets(5)
+    apply_batch(t, _ev(spark, [(10, "U", 1, "b", 5.0)]), run_id="av", epoch=1)
+    res = refresh_agg_view(spark, t, vp)
+    assert res["mode"] == "rebuild"
+    assert _view(spark, vp) == _direct(t) == {"b": (2, 7.0)}
+
+
 def test_streaming_replay_maintains_agg_view(spark, tmpdir_path):
     """replay_stream(agg_views=...): the view refreshes from the sink's
     changelog after every published epoch, and a crash-resume replay never

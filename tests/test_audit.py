@@ -82,6 +82,14 @@ def test_replay_stops_at_first_rejected_epoch(spark, tmpdir_path):
     assert {r["k"]: r["x"] for r in t.read().collect()} == {1: 1.0, 2: 2.0}
 
 
+def test_multi_epoch_replay_of_an_empty_frame_is_a_noop(spark, tmpdir_path):
+    t = _mk(spark, os.path.join(tmpdir_path, "t"))
+    v = t.current_version()
+    out = replay_batch_audited(spark, _ev(spark, []), t, AUDIT, run_id="e", n_epochs=3)
+    assert len(out) == 1 and out[0]["rows_applied"] == 0
+    assert t.current_version() == v and _state(t) == []
+
+
 def test_table_level_invariants_join_the_view(spark, tmpdir_path):
     """The audit SQL can join epoch_changes against the table for
     referential checks while still scanning only the epoch's delta on the

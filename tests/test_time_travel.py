@@ -401,3 +401,23 @@ def test_changelog_window_pins_the_end_version(spark, tmpdir_path):
     assert len(win) == 1 and win[0]["after_content"] == "mid"
     full = t.changelog(v0).collect()
     assert len(full) == 1 and full[0]["after_content"] == "end"
+
+
+def test_changelog_refuses_a_bucket_spec_change_inside_the_window(spark, tmpdir_path):
+    """Before-images are read by the END spec's bucket ids; across a
+    rescale those miss the key's old row and an update came back as an
+    insert with no before-image. The window must raise instead."""
+    import pytest
+
+    t = _bootstrap(spark, os.path.join(tmpdir_path, "clogr"), n_base=20)
+    ka = sorted((r["repo"], r["path"]) for r in t.read().collect())[0]
+    v_since = t.current_version()
+    t.rescale_buckets(5)
+    v_rescaled = t.current_version()
+    apply_batch(t, _ev_rows(spark, [(401, "U", ka[0], ka[1], "after-rescale")]),
+                run_id="rs", epoch=0)
+    with pytest.raises(ValueError, match="bucket spec"):
+        t.changelog(v_since)
+    # a window that opens after the rescale sees the update as an update
+    (r,) = t.changelog(v_rescaled).collect()
+    assert r["op"] == "U" and r["before_content"] is not None
