@@ -61,10 +61,6 @@ def _read_meta(view_path: str) -> dict | None:
         return json.load(f)
 
 
-def _view_cols(group_cols: list[str], sum_cols: list[str]) -> list[str]:
-    return list(group_cols) + ["n_rows"] + [f"sum_{c}" for c in sum_cols]
-
-
 def _aggregate(df: DataFrame, group_cols: list[str], sum_cols: list[str]) -> DataFrame:
     return df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("n_rows"),

@@ -3,11 +3,17 @@ atomic commit manifest + per-partition lineage.
 
 This is the engine's analogue of the reference's staged transaction
 (BreakinBulkLoader.scala:116-142 runInput→runFilters→runExecutor→runOutput→
-execute): each microbatch epoch runs
-    dedup → [DDL | merge]* → epoch-done manifest
-with every unit individually idempotent, so a crash anywhere inside an epoch
-resumes without duplicating work — the distributed, durable version of the
-reference's committed-task skip (ReuseInputExecutorPlugin.scala:61-64).
+execute): each microbatch epoch runs ONE unit loop
+    pre-pass → [quarantine split] → unit (dedup → merge) [→ DDL → unit]*
+with every unit individually idempotent under its own (run, epoch, seq)
+commit, so a crash anywhere inside an epoch resumes without duplicating
+work — the distributed, durable version of the reference's committed-task
+skip (ReuseInputExecutorPlugin.scala:61-64). An epoch without schema changes
+is the one-unit case: its single commit is the ``seq=-1`` epoch-done marker.
+A separate marker follows when the epoch applied a DDL, or quarantined rows
+and merged none; an empty epoch commits nothing. Budget: one pre-pass job plus each
+unit's merge, and one shared stats job when the epoch has several units or
+quarantined rows (see :func:`apply_batch`).
 
 MERGE strategy (copy-on-write, Iceberg-style):
   * the deduped batch is bucketed by pmod(xxhash64(repo, path), n_buckets);
@@ -29,7 +35,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from embulk_filter_copy_spark.cdc.dedup import dedup_events
@@ -252,45 +258,60 @@ def _ts_epoch(col: str = "ts") -> F.Column:
     return F.col(col).cast("timestamp").cast("double")
 
 
-def _batch_stats(table: LakeTable, batch: DataFrame, lsn_col: str) -> tuple[dict, list[dict]]:
-    """One job: per-partition lineage + global stats + affected buckets."""
-    rows = (
-        batch.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_bucket", table.bucket_expr())
-        .groupBy("_pid")
-        .agg(
-            F.min(lsn_col).alias("lsn_min"),
-            F.max(lsn_col).alias("lsn_max"),
-            F.count(F.lit(1)).alias("rows"),
-            F.collect_set("_bucket").alias("buckets"),
-            # epoch seconds computed IN the aggregation: collecting a
-            # timestamp yields a naive datetime in the session tz whose
-            # .timestamp() the OS tz would reinterpret — skewing the
-            # quarantine high-water mark by the tz delta
-            F.max(_ts_epoch()).alias("ts_max"),
-        )
-        .collect()
-    )
-    if not rows:
-        return {"rows": 0, "lsn_min": None, "lsn_max": None, "buckets": [], "ts_max": None}, []
-    buckets = sorted({b for r in rows for b in r["buckets"]})
-    stats = {
-        "rows": sum(r["rows"] for r in rows),
-        "lsn_min": min(r["lsn_min"] for r in rows),
-        "lsn_max": max(r["lsn_max"] for r in rows),
-        "buckets": buckets,
-        "ts_max": max((r["ts_max"] for r in rows if r["ts_max"] is not None), default=None),
-    }
-    lineage = [
-        {
-            "partition_id": r["_pid"],
-            "lsn_min": r["lsn_min"],
-            "lsn_max": r["lsn_max"],
-            "rows": r["rows"],
-        }
-        for r in rows
+def _stats_aggs(lsn_col: str, keep: Column | None = None) -> list[Column]:
+    """Aggregates for one group of rows (rows where ``keep`` holds, or all
+    rows): LSN range, row count, the ``_bucket`` values touched, max event
+    time."""
+
+    def w(c: Column) -> Column:
+        return c if keep is None else F.when(keep, c)
+
+    return [
+        F.min(w(F.col(lsn_col))).alias("lsn_min"),
+        F.max(w(F.col(lsn_col))).alias("lsn_max"),
+        F.count(w(F.lit(1))).alias("rows"),
+        F.collect_set(w(F.col("_bucket"))).alias("buckets"),
+        # epoch seconds computed IN the aggregation: collecting a timestamp
+        # yields a naive datetime in the session tz whose .timestamp() the
+        # OS tz would reinterpret — skewing the quarantine high-water mark
+        # by the tz delta
+        F.max(w(_ts_epoch())).alias("ts_max"),
     ]
-    return stats, lineage
+
+
+def _summary(rows: list) -> dict:
+    """Fold per-source-partition aggregate rows (``_stats_aggs`` plus
+    ``_pid``) into one unit's totals and its per-partition lineage."""
+    rows = [r for r in rows if r["rows"]]
+
+    def ext(agg, col):
+        return agg((r[col] for r in rows if r[col] is not None), default=None)
+
+    return {
+        "rows": sum(r["rows"] for r in rows),
+        "lsn_min": ext(min, "lsn_min"),
+        "lsn_max": ext(max, "lsn_max"),
+        "ts_max": ext(max, "ts_max"),
+        "buckets": sorted({b for r in rows for b in r["buckets"]}),
+        "lineage": [
+            {"partition_id": r["_pid"], "lsn_min": r["lsn_min"],
+             "lsn_max": r["lsn_max"], "rows": r["rows"]}
+            for r in rows
+        ],
+    }
+
+
+def ddl_ranges(schema_events: list[tuple], lsn_col: str = "lsn") -> list[Column]:
+    """Predicates for the data ranges that sorted ``(lsn, change)`` schema
+    events cut a batch into: n events give n + 1 ranges, event i sitting
+    between range i and range i + 1. Both ends are exclusive, so a row at an
+    event's own LSN falls in no range."""
+    lsn = F.col(lsn_col)
+    edges = [None, *(l for l, _ in schema_events), None]
+    return [
+        (F.lit(True) if lo is None else lsn > lo) & (F.lit(True) if hi is None else lsn < hi)
+        for lo, hi in zip(edges, edges[1:])
+    ]
 
 
 def build_merge(
@@ -515,6 +536,36 @@ def read_lineage(table: LakeTable) -> list[dict]:
     return out
 
 
+def _split_late(
+    table: LakeTable, data: DataFrame, ts_max: float | None,
+    quarantine: tuple[str, int], run_id: str, epoch: int,
+) -> tuple[DataFrame, int]:
+    """Write the epoch's late rows to its quarantine directory and return
+    the rest with the late-row count. The threshold advances with the
+    stream-level high-water mark — the MAX event time ever committed to the
+    table (carried in the commit manifests), not just this batch's max — so
+    a batch consisting entirely of late events is fully quarantined instead
+    of slipping through because it defines its own "now"."""
+    qpath, delta = quarantine
+    ref = max((v for v in (ts_max, table.high_ts()) if v is not None), default=None)
+    if ref is None:
+        return data, 0
+    threshold = F.lit(ref - delta)
+    late = data.filter(_ts_epoch() < threshold).persist()
+    try:
+        n = late.count()
+        if not n:
+            return data, 0
+        write_quarantine(late, qpath, run_id, epoch, _sink_id(table))
+    finally:
+        late.unpersist()
+    # NULL event time is 'unknown', not 'late': both the < and >= predicates
+    # are NULL for it, so a bare >= filter would silently drop the row from
+    # BOTH branches. Keep null-ts rows on the data side — LSN ordering (the
+    # real merge key) still governs them
+    return data.filter((_ts_epoch() >= threshold) | _ts_epoch().isNull()), n
+
+
 def apply_batch(
     table: LakeTable,
     batch: DataFrame,
@@ -531,12 +582,12 @@ def apply_batch(
     """Apply one microbatch epoch to `table`, exactly once.
 
     ``exact_applied``: count post-dedup applied rows via ``observe()``
-    (free — collected during the merge's own write job). MUST be False when
-    called from inside a streaming ``foreachBatch``: the JVM-side
-    ``Observation.get`` never receives its listener event there and
-    deadlocks the microbatch thread. Without it, MOR still reports the exact
-    delta-row count (from the written file manifest); COW reports the source
-    row count.
+    (free — collected during the merge's own write job) into the lineage
+    record and the result; the commit then records the pre-dedup row count.
+    MUST be False when called from inside a streaming ``foreachBatch``: the
+    JVM-side ``Observation.get`` never receives its listener event there
+    and deadlocks the microbatch thread. Without it, each unit counts its
+    distinct keys (one key-only job; content never moves).
 
     ``merge_mode``: 'cow' (copy-on-write — read+join+rewrite affected
     buckets; read-optimized) or 'mor' (merge-on-read — append delta files
@@ -545,13 +596,26 @@ def apply_batch(
     ``dedup='skip'``: caller guarantees the batch is already per-key unique
     (the fan-out splitter dedups ONCE and shares the result across sinks
     whose transforms are projection-only — dedup commutes with projections,
-    saving N-1 LWW shuffles for N sinks).
+    saving N-1 LWW shuffles for N sinks). The raw row count is then the
+    applied count, and no counting job runs.
 
-    Sequencing: S (schema-change) events split the batch at their LSNs;
-    each DDL is applied BEFORE the data events that follow it in LSN order
-    (SURVEY.md §7.4 — the subtlest correctness requirement). Every sub-unit
-    carries its own (run_id, epoch, seq) manifest entry; the epoch is gated
-    by a final ``seq=-1`` marker.
+    Units: S (schema-change) events split the batch at their LSNs into data
+    units, and each DDL is applied BEFORE the unit that follows it in LSN
+    order (SURVEY.md §7.4 — the subtlest correctness requirement). An epoch
+    with no S rows is one unit whose commit is the ``seq=-1`` epoch-done
+    marker itself; with k DDLs, data unit i commits under ``seq=2*i`` (its
+    index in the alternating merge/DDL list) and a final ``seq=-1`` marker
+    gates the epoch, so a resumed epoch skips its committed units. Every
+    unit commit carries ``lsn_min``/``lsn_max``/``ts_max``, ``rows_source``
+    (pre-dedup rows) and ``rows_applied``. The marker is written iff the
+    epoch applied a DDL, merged rows or quarantined rows — an empty epoch
+    commits nothing.
+
+    Job budget: one fused pre-pass job over the raw batch (per-partition
+    lineage, buckets, ``ts_max`` and the S rows), then per data unit its
+    merge (plus the distinct-key count when ``exact_applied`` is False and
+    ``dedup`` is not 'skip'). Only a multi-unit or quarantined epoch adds
+    ONE stats job, computing every unit's per-partition stats at once.
 
     ``quarantine=(path, delta_seconds)``: events with ts older than
     max(batch ts_max, table high-water mark) - delta are written to a
@@ -573,14 +637,7 @@ def apply_batch(
     # lineage (source LSN range + rows), affected buckets, the late-data
     # threshold input, and any schema-change rows — instead of one job each.
     is_data = F.col(op_col) != "S"
-    agg_cols = [
-        F.min(F.when(is_data, F.col(lsn_col))).alias("lsn_min"),
-        F.max(F.when(is_data, F.col(lsn_col))).alias("lsn_max"),
-        F.sum(F.when(is_data, F.lit(1)).otherwise(F.lit(0))).alias("rows"),
-        F.collect_set(F.when(is_data, F.col("_bucket"))).alias("buckets"),
-        # epoch seconds, not a naive datetime (see _batch_stats)
-        F.max(F.when(is_data, _ts_epoch())).alias("ts_max"),
-    ]
+    agg_cols = _stats_aggs(lsn_col, keep=is_data)
     has_schema_col = "schema_change" in batch.columns
     if has_schema_col:
         agg_cols.append(
@@ -601,195 +658,90 @@ def apply_batch(
         for s in (r["s_rows"] if has_schema_col else [])
     )
     data = batch.filter(is_data)
+    pre = _summary(prows)
+    quarantined = 0
+    if quarantine is not None:
+        data, quarantined = _split_late(table, data, pre["ts_max"], quarantine, run_id, epoch)
 
-    if not schema_events and quarantine is None:
-        # ---- fast path (the steady-state shape): no schema boundary, no
-        # late-data quarantine → a single dedup→merge unit whose applied-row
-        # count is observed DURING the merge write (CollectMetrics), so the
-        # whole epoch costs two jobs: stats + merge.
-        raw_rows = sum(r["rows"] for r in prows)
-        if raw_rows == 0:
-            return {
-                "skipped": False, "run_id": run_id, "epoch": epoch,
-                "rows_applied": 0, "buckets": [], "quarantined": 0,
-                "duration_sec": time.time() - t0,
-            }
-        buckets = sorted({b for r in prows for b in r["buckets"]})
-        lsn_lo = min(r["lsn_min"] for r in prows if r["lsn_min"] is not None)
-        lsn_hi = max(r["lsn_max"] for r in prows if r["lsn_max"] is not None)
-        ts_hi = max((r["ts_max"] for r in prows if r["ts_max"] is not None), default=None)
+    ranges = ddl_ranges(schema_events, lsn_col)
+    if len(ranges) == 1 and not quarantined:
+        stats = [pre]
+    else:
+        # one job: every unit's per-partition stats over the rows it merges
+        unit = F.when(ranges[0], 0)
+        for i, pred in enumerate(ranges[1:], 1):
+            unit = unit.when(pred, i)
+        urows = (
+            data.withColumn("_unit", unit)
+            .withColumn("_pid", F.spark_partition_id())
+            .withColumn("_bucket", table.bucket_expr())
+            .groupBy("_unit", "_pid")
+            .agg(*_stats_aggs(lsn_col))
+            .collect()
+        )
+        stats = [_summary([r for r in urows if r["_unit"] == i]) for i in range(len(ranges))]
+
+    total_rows = 0
+    all_buckets: set[int] = set()
+    for i, pred in enumerate(ranges):
+        if i:
+            s_lsn, change = schema_events[i - 1]
+            table.update_schema(change, schema_lsn=s_lsn)
+        seq = EPOCH_DONE_SEQ if len(ranges) == 1 else 2 * i
+        st = stats[i]
+        if not st["rows"] or table.has_commit(run_id, epoch, seq):
+            continue
+        sub = data.filter(pred)
         keys = tuple(table.key_columns)
-        deduped = dedup_events(data, dedup, keys=keys, lsn_col=lsn_col, n_salts=n_salts)
-        # exact post-dedup applied count, by path:
-        #   * dedup='skip'  — the batch is already per-key unique: raw_rows
-        #     IS the applied count (free; the shared fan-out dedup case)
-        #   * exact_applied — Observation collected during the merge's own
-        #     write job (free; the batch path)
-        #   * streaming     — Observation.get deadlocks inside foreachBatch,
-        #     so count distinct keys against the foreachBatch-persisted
-        #     cache (one key-only shuffle job; content never moves)
+        deduped = dedup_events(sub, dedup, keys=keys, lsn_col=lsn_col, n_salts=n_salts)
         obs = None
         if dedup == "skip":
-            applied_pre = raw_rows
+            applied = st["rows"]
         elif exact_applied:
             obs = Observation()
             deduped = deduped.observe(obs, F.count(F.lit(1)).alias("applied"))
-            applied_pre = None
+            applied = st["rows"]  # until the merge's write yields the exact count
         else:
-            applied_pre = data.select(*keys).distinct().count()
+            applied = sub.select(*keys).distinct().count()
         commit = {
             "run_id": run_id,
             "epoch": epoch,
-            "seq": EPOCH_DONE_SEQ,
-            "lsn_min": lsn_lo,
-            "lsn_max": lsn_hi,
-            "ts_max": ts_hi,
-            # exact post-dedup applied count when known at commit-build time
-            # (observe-path exactness lands in the lineage file instead);
-            # rows_source is always the pre-dedup coverage
-            "rows_applied": applied_pre if applied_pre is not None else raw_rows,
-            "rows_source": raw_rows,
+            "seq": seq,
+            "lsn_min": st["lsn_min"],
+            "lsn_max": st["lsn_max"],
+            "ts_max": st["ts_max"],
+            "rows_source": st["rows"],
+            "rows_applied": applied,
         }
         if merge_mode == "mor":
-            ret = append_delta_batch(table, deduped, commit, lsn_col=lsn_col, op_col=op_col)
+            append_delta_batch(table, deduped, commit, lsn_col=lsn_col, op_col=op_col)
         else:
-            ret = merge_into(table, deduped, commit, buckets=buckets, lsn_col=lsn_col, op_col=op_col)
+            merge_into(table, deduped, commit, buckets=st["buckets"], lsn_col=lsn_col, op_col=op_col)
         if obs is not None:
             applied = int(obs.get["applied"])
-        elif applied_pre is not None:
-            applied = applied_pre
-        else:
-            applied = int(ret["rows"])  # mor: delta rows written == applied
         dur = max(time.time() - t0, 1e-9)
-        lineage = [
-            {"partition_id": r["_pid"], "lsn_min": r["lsn_min"],
-             "lsn_max": r["lsn_max"], "rows": r["rows"]}
-            for r in prows if r["rows"]
-        ]
         _write_lineage(
-            table, run_id, epoch, EPOCH_DONE_SEQ, lineage,
+            table, run_id, epoch, seq, st["lineage"],
             {"rows": applied, "duration_sec": dur, "events_per_sec": applied / dur},
         )
-        return {
-            "skipped": False,
-            "run_id": run_id,
-            "epoch": epoch,
-            "rows_applied": applied,
-            "buckets": buckets,
-            "quarantined": 0,
-            "duration_sec": time.time() - t0,
-        }
+        total_rows += applied
+        all_buckets.update(st["buckets"])
 
-    quarantined = 0
-    if quarantine is not None:
-        qpath, delta = quarantine
-        ts_max = max((r["ts_max"] for r in prows if r["ts_max"] is not None), default=None)
-        # stream-level high-water mark: the threshold advances with the MAX
-        # event time ever committed to this table (carried in the commit
-        # manifests), not just this batch's max — a batch consisting
-        # entirely of late events is fully quarantined instead of slipping
-        # through because it defines its own "now"
-        batch_ts = ts_max  # already epoch seconds (aggregated as double)
-        hwm = table.high_ts()
-        ref = max((v for v in (batch_ts, hwm) if v is not None), default=None)
-        if ref is not None:
-            threshold = ref - delta
-            late = data.filter(_ts_epoch() < F.lit(threshold)).persist()
-            try:
-                quarantined = late.count()
-                if quarantined:
-                    write_quarantine(late, qpath, run_id, epoch, _sink_id(table))
-                    # NULL event time is 'unknown', not 'late': both the <
-                    # and >= predicates are NULL for it, so a bare >= filter
-                    # would silently drop the row from BOTH branches. Keep
-                    # null-ts rows on the data side — LSN ordering (the real
-                    # merge key) still governs them
-                    data = data.filter(
-                        (_ts_epoch() >= F.lit(threshold)) | _ts_epoch().isNull()
-                    )
-            finally:
-                late.unpersist()
-
-    # build the unit list: (seq, kind, payload)
-    boundaries = [l for l, _ in schema_events]
-    ranges = []  # (lo_exclusive, hi_inclusive) lsn ranges between schema events
-    lo = None
-    for b in boundaries:
-        ranges.append((lo, b))
-        lo = b
-    ranges.append((lo, None))
-
-    units: list[tuple[str, object]] = []
-    for i, (rlo, rhi) in enumerate(ranges):
-        units.append(("merge", (rlo, rhi)))
-        if i < len(schema_events):
-            units.append(("ddl", schema_events[i]))
-
-    single_merge = len(units) == 1
-    total_rows = 0
-    all_buckets: set[int] = set()
-    lsn_lo, lsn_hi = None, None
-
-    for seq, (kind, payload) in enumerate(units):
-        if kind == "ddl":
-            s_lsn, change = payload
-            table.update_schema(change, schema_lsn=s_lsn)
-            continue
-        rlo, rhi = payload
-        sub = data
-        if rlo is not None:
-            sub = sub.filter(F.col(lsn_col) > rlo)
-        if rhi is not None:
-            sub = sub.filter(F.col(lsn_col) < rhi)
-        eff_seq = EPOCH_DONE_SEQ if single_merge else seq
-        if table.has_commit(run_id, epoch, eff_seq):
-            continue
-        keys = tuple(table.key_columns)
-        deduped = dedup_events(sub, dedup, keys=keys, lsn_col=lsn_col, n_salts=n_salts)
-        deduped = deduped.persist()
-        try:
-            stats, lineage = _batch_stats(table, deduped, lsn_col)
-            if stats["rows"] == 0:
-                continue
-            commit = {
-                "run_id": run_id,
-                "epoch": epoch,
-                "seq": eff_seq,
-                "lsn_min": stats["lsn_min"],
-                "lsn_max": stats["lsn_max"],
-                # stats are computed over the deduped batch → exact applied
-                "rows_applied": stats["rows"],
-                "ts_max": stats["ts_max"],
-            }
-            if merge_mode == "mor":
-                append_delta_batch(table, deduped, commit, lsn_col=lsn_col, op_col=op_col)
-            else:
-                merge_into(table, deduped, commit, buckets=stats["buckets"], lsn_col=lsn_col, op_col=op_col)
-            dur = max(time.time() - t0, 1e-9)
-            _write_lineage(
-                table, run_id, epoch, eff_seq, lineage,
-                {"rows": stats["rows"], "duration_sec": dur, "events_per_sec": stats["rows"] / dur},
-            )
-            total_rows += stats["rows"]
-            all_buckets |= set(stats["buckets"])
-            lsn_lo = stats["lsn_min"] if lsn_lo is None else min(lsn_lo, stats["lsn_min"])
-            lsn_hi = stats["lsn_max"] if lsn_hi is None else max(lsn_hi, stats["lsn_max"])
-        finally:
-            deduped.unpersist()
-
-    # the epoch-done marker must exist even when every unit contributed 0
-    # rows (e.g. a fully-quarantined all-late batch, now possible with the
-    # HWM threshold): without it, an at-least-once redelivery of the epoch
-    # would re-append the same late rows to the quarantine path. For a
-    # non-empty single merge the merge's own commit already carried seq=-1.
-    if not table.has_commit(run_id, epoch, EPOCH_DONE_SEQ):
+    # a multi-unit epoch, or a one-unit epoch whose rows were all
+    # quarantined, needs its own marker: without it, an at-least-once
+    # redelivery would re-run the DDLs' units or re-append the same late
+    # rows to the quarantine path. A one-unit epoch that merged rows is
+    # already gated by its unit commit; an empty epoch commits nothing.
+    if schema_events or (quarantined and not stats[0]["rows"]):
+        lows = [st["lsn_min"] for st in stats if st["lsn_min"] is not None]
+        highs = [st["lsn_max"] for st in stats if st["lsn_max"] is not None]
         table.add_commit(
             {
                 "run_id": run_id,
                 "epoch": epoch,
                 "seq": EPOCH_DONE_SEQ,
-                "lsn_min": lsn_lo,
-                "lsn_max": lsn_hi,
+                "lsn_min": min(lows, default=None),
+                "lsn_max": max(highs, default=None),
                 "rows_applied": total_rows,
             }
         )

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from embulk_filter_copy_spark.cdc.apply import apply_batch
+from embulk_filter_copy_spark.cdc.replayer import _replay_epochs
 from embulk_filter_copy_spark.lake.table import LakeTable
 
 
@@ -90,26 +91,9 @@ def replay_batch_audited(
     """Bounded audited replay: contiguous LSN epochs, each individually
     gated — the first rejected epoch rolls back and raises, leaving every
     earlier epoch published (they passed their own audits)."""
-    from pyspark.sql import functions as F
-
-    lo = hi = None
-    if n_epochs > 1:
-        lo, hi = events.agg(F.min("lsn"), F.max("lsn")).collect()[0]
-    if lo is None:  # one epoch asked for, or nothing to split: one no-op unit
-        return [
-            apply_batch_audited(
-                spark, table, events, run_id, 0, audit_sql, **apply_kwargs
-            )
-        ]
-    span = max((hi - lo + 1) // n_epochs, 1)
-    events = events.localCheckpoint(eager=True)
-    out = []
-    for i in range(n_epochs):
-        top = hi if i == n_epochs - 1 else lo + (i + 1) * span - 1
-        sub = events.filter(
-            (F.col("lsn") >= lo + i * span) & (F.col("lsn") <= top)
-        )
-        out.append(
-            apply_batch_audited(spark, table, sub, run_id, i, audit_sql, **apply_kwargs)
-        )
-    return out
+    return _replay_epochs(
+        events, n_epochs,
+        lambda chunk, e: apply_batch_audited(
+            spark, table, chunk, run_id, e, audit_sql, **apply_kwargs
+        ),
+    )

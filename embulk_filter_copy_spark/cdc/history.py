@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from embulk_filter_copy_spark.lake.schema import TableSchema
 from embulk_filter_copy_spark.lake.table import LakeTable
 
-from embulk_filter_copy_spark.cdc.apply import _write_lineage
+from embulk_filter_copy_spark.cdc.apply import _write_lineage, ddl_ranges
 
 
 def scd2_history(
@@ -250,25 +250,11 @@ def apply_history_batch(
         total = int(ret["rows"])
         lineage = _file_lineage(ret)
     else:
-        bounds = [l for l, _ in schema_events]
-        ranges = []
-        lo = None
-        for b in bounds:
-            ranges.append((lo, b))
-            lo = b
-        ranges.append((lo, None))
-        seq = 0
         resumed = False
-        for i, (rlo, rhi) in enumerate(ranges):
-            seq += 1
-            sub = data
-            if rlo is not None:
-                sub = sub.filter(F.col(lsn_col) > rlo)
-            if rhi is not None:
-                sub = sub.filter(F.col(lsn_col) < rhi)
+        for seq, pred in enumerate(ddl_ranges(schema_events, lsn_col), 1):
             if not table.has_commit(run_id, epoch, seq):
                 ret = table.append(
-                    _shape_versions(table, sub, lsn_col, op_col),
+                    _shape_versions(table, data.filter(pred), lsn_col, op_col),
                     commit={"run_id": run_id, "epoch": epoch, "seq": seq},
                 )
                 total += int(ret["rows"])
@@ -282,8 +268,8 @@ def apply_history_batch(
                 total += rows
                 lineage += rec
                 resumed = True
-            if i < len(schema_events):
-                s_lsn, change = schema_events[i]
+            if seq <= len(schema_events):
+                s_lsn, change = schema_events[seq - 1]
                 table.update_schema(change, schema_lsn=s_lsn)
         table.add_commit({"run_id": run_id, "epoch": epoch, "seq": 0})
     dur = max(time.time() - t0, 1e-9)

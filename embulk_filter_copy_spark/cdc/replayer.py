@@ -598,6 +598,34 @@ def redrive_dead_letters(
     }
 
 
+def _replay_epochs(events: DataFrame, n_epochs: int, apply_epoch) -> list[dict]:
+    """Cut the log into ``n_epochs`` contiguous LSN ranges and return
+    ``apply_epoch(chunk, epoch)`` for each, in LSN order. One epoch skips
+    the bounds scan, and an empty log is one no-op epoch either way."""
+    if n_epochs == 1:
+        return [apply_epoch(events, 0)]
+    # materialize the log once so the per-epoch LSN filters re-read the
+    # cache instead of re-scanning the source n_epochs times (on a cluster
+    # the equivalent is an LSN-sorted one-pass split — repartitionByRange(lsn)
+    # + per-range writes; at microbatch scale the cache is the same shape
+    # with less machinery)
+    events = events.persist()
+    try:
+        lo, hi = events.agg(F.min("lsn"), F.max("lsn")).collect()[0]
+        if lo is None:
+            return [apply_epoch(events, 0)]
+        span = (hi - lo + 1) / n_epochs
+        results = []
+        for e in range(n_epochs):
+            e_lo = lo + int(e * span)
+            e_hi = lo + int((e + 1) * span) if e < n_epochs - 1 else hi + 1
+            chunk = events.filter((F.col("lsn") >= e_lo) & (F.col("lsn") < e_hi))
+            results.append(apply_epoch(chunk, e))
+        return results
+    finally:
+        events.unpersist()
+
+
 def replay_batch(
     spark: SparkSession,
     events: DataFrame,
@@ -612,34 +640,10 @@ def replay_batch(
     ``n_epochs`` contiguous LSN ranges and apply them in order. Used by M1
     correctness tests and the throughput benchmark (same apply path as
     streaming — foreachBatch calls the identical ``apply_batch``)."""
-    if n_epochs == 1:
-        # single-epoch: no LSN range split needed — skip the bounds scan
-        # (one less serial job; empty input degenerates to a 0-row epoch)
-        return [apply_batch(table, events, run_id=run_id, epoch=0, dedup=dedup,
-                            n_salts=n_salts, merge_mode=merge_mode)]
-    # multi-epoch: materialize the log once so the per-epoch LSN filters
-    # re-read the cache instead of re-scanning the source n_epochs times
-    # (on a cluster the equivalent is an LSN-sorted one-pass split —
-    # repartitionByRange(lsn) + per-range writes; at microbatch scale the
-    # cache is the same shape with less machinery)
-    events = events.persist()
-    try:
-        bounds = events.agg(F.min("lsn"), F.max("lsn")).collect()[0]
-        lo, hi = bounds[0], bounds[1]
-        results = []
-        if lo is None:
-            return results
-        span = (hi - lo + 1) / n_epochs
-        for e in range(n_epochs):
-            e_lo = lo + int(e * span)
-            e_hi = lo + int((e + 1) * span) if e < n_epochs - 1 else hi + 1
-            chunk = events.filter((F.col("lsn") >= e_lo) & (F.col("lsn") < e_hi))
-            results.append(
-                apply_batch(
-                    table, chunk, run_id=run_id, epoch=e, dedup=dedup,
-                    n_salts=n_salts, merge_mode=merge_mode,
-                )
-            )
-        return results
-    finally:
-        events.unpersist()
+    return _replay_epochs(
+        events, n_epochs,
+        lambda chunk, e: apply_batch(
+            table, chunk, run_id=run_id, epoch=e, dedup=dedup,
+            n_salts=n_salts, merge_mode=merge_mode,
+        ),
+    )

@@ -158,6 +158,19 @@ class TableSchema:
                 return f
         return None
 
+    def project_from(self, old: TableSchema) -> list:
+        """Columns reading a frame written under ``old`` as this schema,
+        matched by field id: a renamed field is aliased, a widened one cast,
+        and a field ``old`` lacks comes back NULL."""
+        from pyspark.sql import functions as F
+
+        cols = []
+        for f in self.fields:
+            of = old.field_by_id(f.id)
+            src = F.lit(None) if of is None else F.col(of.name)
+            cols.append(src.cast(spark_type(f.type)).alias(f.name))
+        return cols
+
     def to_struct(self, nullable: bool = True) -> T.StructType:
         return T.StructType(
             [T.StructField(f.name, spark_type(f.type), nullable) for f in self.fields]

@@ -609,14 +609,7 @@ class LakeTable:
                 for n, t in META_FIELDS:
                     file_struct = file_struct.add(T.StructField(n, spark_type(t), True))
                 raw = self.spark.read.schema(file_struct).parquet(*paths)
-                cols = []
-                for cf in cur.fields:
-                    of = old.field_by_id(cf.id)
-                    if of is None:
-                        cols.append(F.lit(None).cast(spark_type(cf.type)).alias(cf.name))
-                    else:
-                        cols.append(F.col(of.name).cast(spark_type(cf.type)).alias(cf.name))
-                cols += [F.col(n) for n in META_NAMES]
+                cols = cur.project_from(old) + [F.col(n) for n in META_NAMES]
                 cols.append(F.lit(is_delta).alias("_is_delta"))
                 parts.append(raw.select(*cols))
             df = parts[0]
@@ -731,14 +724,19 @@ class LakeTable:
         cur_snap = self.snapshot_at(cur_version)
         old = self.snapshot_at(since_version)
         added = self._added_after(old, cur_snap)
-        # a rollback between the snapshots REWOUND state the consumer has
-        # already seen — net-change semantics cannot represent un-happening,
-        # so raise (the latest crossing rollback's marker is always present:
-        # markers are only removed by a rollback to an even earlier version,
-        # which leaves its own, later marker). Checked BEFORE the purge
-        # guard below, whose root marker a rollback restores to the
-        # target's.
-        rb = [m for m in cur_snap["rollbacks"] if m["at_version"] > since_version]
+        # a rollback between the snapshots to a version BELOW since_version
+        # rewound state the consumer has already seen — net-change semantics
+        # cannot represent un-happening, so raise. A rollback to
+        # since_version or later undid only versions the consumer never
+        # saw, and the diff against the restored file list is exact. (The
+        # latest crossing rollback's marker is always present: markers are
+        # only removed by a rollback to an even earlier version, which
+        # leaves its own, later marker.) Checked BEFORE the purge guard
+        # below, whose root marker a rollback restores to the target's.
+        rb = [
+            m for m in cur_snap["rollbacks"]
+            if m["at_version"] > since_version and m["rollback_to"] < since_version
+        ]
         if rb:
             raise ValueError(
                 f"read_changes(since_version={since_version}): the table was "
@@ -842,21 +840,14 @@ class LakeTable:
         bset = sorted(
             {f["bucket"] for f in self._added_after(old_snap, cur_snap)}
         )
-        before = self.read(buckets=bset, version=since_version)
         cur_schema = cur_snap.schema
-        old_schema = old_snap.schema
-        proj = []
-        for cf in cur_schema.fields:
-            of = old_schema.field_by_id(cf.id)
-            if of is None:
-                proj.append(F.lit(None).cast(spark_type(cf.type)).alias(cf.name))
-            else:
-                proj.append(F.col(of.name).cast(spark_type(cf.type)).alias(cf.name))
-        before = before.select(*proj)
+        before = self.read(buckets=bset, version=since_version).select(
+            *cur_schema.project_from(old_snap.schema)
+        )
         keys = list(cur_snap["key_columns"])
         payload = [f for f in cur_schema.fields if f.name not in keys]
         b = before.select(
-            *keys,
+            *[F.col(k).alias(f"_before_{k}") for k in keys],
             *[F.col(f.name).alias(f"before_{f.name}") for f in payload],
             F.lit(True).alias("_had_before"),
         )
@@ -866,7 +857,12 @@ class LakeTable:
             F.col("op"),
             *[F.col(f.name).alias(f"after_{f.name}") for f in payload],
         )
-        j = a.join(b, on=keys, how="left")
+        # null-safe on the keys, as the merge matches them: a NULL key is
+        # one row, and plain equality would turn its update into an insert
+        # and drop its delete
+        j = a.join(
+            b, [F.col(k).eqNullSafe(F.col(f"_before_{k}")) for k in keys], "left"
+        )
         had = F.coalesce(F.col("_had_before"), F.lit(False))
         # a delete of a never-visible key is not an observable change
         j = j.filter(~((F.col("op") == "D") & ~had))
@@ -1454,10 +1450,11 @@ class LakeTable:
 
         Consequence for change-feed consumers, enforced in
         ``read_changes``: a feed whose ``since_version`` predates a
-        rollback raises — net-change semantics cannot represent
-        un-happening (rows the consumer already saw are not deletes, they
-        never happened). Consumers re-sync from the rolled-back state, the
-        same contract as tombstone purges and snapshot expiration.
+        rollback and lies above its target raises — net-change semantics
+        cannot represent un-happening (rows the consumer already saw are not
+        deletes, they never happened). Consumers re-sync from the
+        rolled-back state, the same contract as tombstone purges and
+        snapshot expiration.
         """
         cur = self.current_version()
         if not 1 <= to_version < cur:

@@ -3,9 +3,8 @@ with typed metadata. Metadata extraction is pure built-in expressions (the
 fast path); only the codec-requiring decode step uses Arrow-batched
 ``mapInPandas``.
 
-The container ships no image/audio codecs, so the DECODE step is stubbed
-(deterministic fake features / NotImplementedError for real codecs) — but the
-Spark-side plumbing is real and tested: schema contracts, batch iteration,
+No image/audio codec library is available, so the DECODE step is stubbed
+(deterministic fake features) — but the Spark-side plumbing is real and tested: schema contracts, batch iteration,
 partition-preserving metadata extraction, and the UDF signatures a decoder
 would plug into. At scale the binary payloads stay columnar (parquet binary)
 and the Arrow transfer moves whole batches, never rows.
@@ -51,21 +50,15 @@ def extract_metadata(assets: DataFrame) -> DataFrame:
     )
 
 
-def decode_and_featurize(assets: DataFrame, n_features: int = 8, real_codec: bool = False) -> DataFrame:
+def decode_and_featurize(assets: DataFrame, n_features: int = 8) -> DataFrame:
     """The decode→feature step a real pipeline would run (resize, frame
-    sample, mel-spectrogram...). ``real_codec=True`` raises — the container
-    has no codec libs (STUB, clearly marked). The default path produces a
-    deterministic fake feature vector derived from content bytes, so the
-    distributed plumbing (batch shape, schema, partitioning) is fully
-    exercised and testable."""
+    sample, mel-spectrogram...). No media codec library is available, so
+    this STUB produces a deterministic fake feature vector derived from
+    content bytes; the distributed plumbing (batch shape, schema,
+    partitioning) is fully exercised and testable."""
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if real_codec:
-                raise NotImplementedError(
-                    "media codecs (PIL/ffmpeg/librosa) are not available in this "
-                    "environment; plug the real decoder in here"
-                )
             feats = []
             for b in pdf["payload"]:
                 if b is None:

@@ -148,6 +148,25 @@ def test_refresh_rebuilds_when_feed_refuses_the_gap(spark, tmpdir_path):
     assert _view(spark, vp) == _direct(t)
 
 
+def test_refresh_stays_incremental_after_an_audit_rejected_epoch(spark, tmpdir_path):
+    """A rejected epoch rolls the table back to the view's own version: no
+    state the view saw was undone, so the refresh needs no rebuild."""
+    import pytest
+
+    from embulk_filter_copy_spark.cdc.audit import AuditViolation, apply_batch_audited
+
+    audit = "SELECT * FROM epoch_changes WHERE x < 0"
+    t = _mk(spark, os.path.join(tmpdir_path, "t"))
+    vp = os.path.join(tmpdir_path, "view")
+    apply_batch(t, _ev(spark, [(1, "I", 1, "a", 1.0)]), run_id="av", epoch=0)
+    build_agg_view(spark, t, vp, group_cols=["grp"], sum_cols=["x"])
+    with pytest.raises(AuditViolation):
+        apply_batch_audited(spark, t, _ev(spark, [(2, "I", 2, "a", -1.0)]), "av", 1, audit)
+    apply_batch_audited(spark, t, _ev(spark, [(2, "I", 2, "b", 2.0)]), "av", 1, audit)
+    assert refresh_agg_view(spark, t, vp)["mode"] == "incremental"
+    assert _view(spark, vp) == _direct(t) == {"a": (1, 1.0), "b": (1, 2.0)}
+
+
 def test_refresh_rebuilds_across_a_bucket_spec_change(spark, tmpdir_path):
     t = _mk(spark, os.path.join(tmpdir_path, "t"))
     vp = os.path.join(tmpdir_path, "view")

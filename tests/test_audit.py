@@ -90,6 +90,27 @@ def test_multi_epoch_replay_of_an_empty_frame_is_a_noop(spark, tmpdir_path):
     assert t.current_version() == v and _state(t) == []
 
 
+def test_plain_and_audited_replay_cut_the_same_epochs(spark, tmpdir_path):
+    """Both bounded replays share one LSN splitter: the same log commits the
+    same per-epoch LSN ranges, and an empty log is one no-op epoch."""
+    from embulk_filter_copy_spark.cdc.replayer import replay_batch
+
+    ev = _ev(spark, [(lsn, "I", lsn, "a", float(lsn)) for lsn in range(1, 12)])
+    plain = _mk(spark, os.path.join(tmpdir_path, "plain"))
+    audited = _mk(spark, os.path.join(tmpdir_path, "audited"))
+    replay_batch(spark, ev, plain, run_id="cut", n_epochs=3)
+    replay_batch_audited(spark, ev, audited, AUDIT, run_id="cut", n_epochs=3)
+
+    def ranges(t):
+        return [(c["epoch"], c["lsn_min"], c["lsn_max"])
+                for c in t.commits() if c["run_id"] == "cut"]
+
+    assert ranges(plain) == ranges(audited) == [(0, 1, 3), (1, 4, 7), (2, 8, 11)]
+    empty = _ev(spark, [])
+    out = replay_batch(spark, empty, plain, run_id="none", n_epochs=3)
+    assert len(out) == 1 and out[0]["rows_applied"] == 0
+
+
 def test_table_level_invariants_join_the_view(spark, tmpdir_path):
     """The audit SQL can join epoch_changes against the table for
     referential checks while still scanning only the epoch's delta on the

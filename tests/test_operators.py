@@ -167,9 +167,6 @@ def test_multimodal_metadata_and_stub_features(spark):
     assert all(0 <= x <= 1 for x in feats[1]["feature"])
     assert feats[1]["decoder"] == "stub-sha256"
 
-    with pytest.raises(Exception):  # NotImplementedError surfaced through Spark
-        M.decode_and_featurize(assets, real_codec=True).collect()
-
 
 def test_simhash_banding_is_lossless(spark):
     """bands > max_hamming ⇒ the banded equi-join finds EXACTLY the

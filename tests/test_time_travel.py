@@ -284,15 +284,54 @@ def test_read_changes_refuses_to_cross_rollback(spark, tmpdir_path):
     t.rollback(v0)
     v_rb = t.current_version()
 
-    # a feed whose since predates the rollback would hand the consumer
-    # already-seen state as fresh changes — refuse
-    for since in (v0, v1):
-        with pytest.raises(ValueError, match="rolled back"):
-            t.read_changes(since).count()
+    # a feed whose since lies above the rollback's target would hand the
+    # consumer already-seen state as fresh changes — refuse
+    with pytest.raises(ValueError, match="rolled back"):
+        t.read_changes(v1).count()
     # from the rollback point forward the feed is exact again
     assert t.read_changes(v_rb).count() == 0
     apply_batch(t, ev.filter(F.col("lsn") <= 50), run_id="rbc2", epoch=0)
     assert t.read_changes(v_rb).count() > 0
+
+
+def _feed(t, since, version=None):
+    return sorted(tuple(r) for r in t.read_changes(since, version=version).collect())
+
+
+def test_read_changes_after_a_rollback_to_since_is_empty(spark, tmpdir_path):
+    t = _bootstrap(spark, os.path.join(tmpdir_path, "rb0"))
+    v0 = t.current_version()
+    apply_batch(t, gen_change_events(spark, 100, 200, seed=9), run_id="rb", epoch=0)
+    t.rollback(v0)
+    assert _feed(t, v0) == []
+
+
+def test_read_changes_after_a_rollback_above_since_keeps_the_survivors(spark, tmpdir_path):
+    """A rollback to a version after since only undid versions the consumer
+    never saw: the feed is the one over the surviving history."""
+    t = _bootstrap(spark, os.path.join(tmpdir_path, "rb1"))
+    v0 = t.current_version()
+    ev = gen_change_events(spark, 100, 200, seed=9)
+    apply_batch(t, ev.filter(F.col("lsn") <= 100), run_id="rb", epoch=0)
+    v1 = t.current_version()
+    apply_batch(t, ev.filter(F.col("lsn") > 100), run_id="rb", epoch=1)
+    t.rollback(v1)
+    survivors = _feed(t, v0, version=v1)
+    assert survivors and _feed(t, v0) == survivors
+
+
+def test_read_changes_after_a_rollback_below_since_raises(spark, tmpdir_path):
+    import pytest
+
+    t = _bootstrap(spark, os.path.join(tmpdir_path, "rb2"))
+    v0 = t.current_version()
+    ev = gen_change_events(spark, 100, 200, seed=9)
+    apply_batch(t, ev.filter(F.col("lsn") <= 100), run_id="rb", epoch=0)
+    v1 = t.current_version()
+    apply_batch(t, ev.filter(F.col("lsn") > 100), run_id="rb", epoch=1)
+    t.rollback(v0)
+    with pytest.raises(ValueError, match="rolled back"):
+        t.read_changes(v1)
 
 
 # ---------------------------------------------------------------------------
@@ -421,3 +460,23 @@ def test_changelog_refuses_a_bucket_spec_change_inside_the_window(spark, tmpdir_
     # a window that opens after the rescale sees the update as an update
     (r,) = t.changelog(v_rescaled).collect()
     assert r["op"] == "U" and r["before_content"] is not None
+
+
+def test_changelog_matches_null_keys_like_the_merge(spark, tmpdir_path):
+    """The merge matches keys null-safe, so a NULL key is one row; the
+    changelog must pair its before-image the same way — an update is 'U'
+    (not 'I') and a delete is 'D' (not dropped)."""
+    t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "nullk"), REPO_FILES_SCHEMA,
+        key_columns=["repo", "path"], n_buckets=4,
+    )
+    apply_batch(t, _ev_rows(spark, [(1, "I", None, "a.py", "v1")]), run_id="n", epoch=0)
+    v1 = t.current_version()
+    apply_batch(t, _ev_rows(spark, [(2, "U", None, "a.py", "v2")]), run_id="n", epoch=1)
+    v2 = t.current_version()
+    (u,) = t.changelog(v1).collect()
+    assert (u["repo"], u["path"], u["op"]) == (None, "a.py", "U")
+    assert (u["before_content"], u["after_content"]) == ("v1", "v2")
+    apply_batch(t, _ev_rows(spark, [(3, "D", None, "a.py", None)]), run_id="n", epoch=2)
+    (d,) = t.changelog(v2).collect()
+    assert (d["repo"], d["op"], d["before_content"], d["after_content"]) == (None, "D", "v2", None)
