@@ -2,8 +2,9 @@
 
 ``entry`` runs the flagship query (CDC replay of the events table through
 the LakeTable merge path) at sf0.001. ``queries`` / ``oracle_sql`` expose
-every implemented operator from SURVEY.md §2 plus the training-data pipeline
-operators, each with a DuckDB oracle where SQL can express it.
+the 66 catalog queries (the 25 CDC engine queries first, then the TPC-H
+and training-data dedup/similarity/sampling queries), each paired with a
+DuckDB oracle.
 """
 
 from __future__ import annotations

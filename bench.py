@@ -83,7 +83,6 @@ MEDIAN_PROTOCOL_QUERIES = {
     "q3_shipping_priority",
     "q5_local_supplier_volume",
     "cdc_sessionize",
-    "pipeline_build_corpus",
 }
 
 HEADLINE_QUERIES = [
@@ -101,14 +100,11 @@ HEADLINE_QUERIES = [
     "dedup_simhash_pairs",
     "ann_bruteforce_topk",
     "ann_lsh_topk",
-    "text_quality_by_source",
-    "multimodal_metadata",
     "cdc_patch_fold",
     "cdc_changelog_images",
     "cdc_incremental_agg",
     "sample_domain_token_cap",
     "ann_ivf_recall",
-    "pipeline_build_corpus",
 ]
 
 

@@ -1,5 +1,4 @@
 """Large-scale training-data pipeline operators (dedup, similarity search,
-text analysis, multimodal plumbing) — first-class engine components built
-Spark-first: inverted-index joins instead of cross joins, JVM-side hash
-expressions instead of Python, Arrow-vectorized UDFs where Python is
-unavoidable."""
+sampling) — first-class engine components built Spark-first:
+inverted-index joins instead of cross joins, JVM-side hash expressions
+instead of Python."""

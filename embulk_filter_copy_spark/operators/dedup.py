@@ -55,8 +55,8 @@ def ngram_shingles(
     """(id, sh) word n-gram shingles, built entirely JVM-side
     (split → sequence → transform → explode, no Python). ``distinct=True``
     gives the SET view the similarity family needs; ``distinct=False``
-    keeps one row per window position (the exact-substring view —
-    `decontam.duplicated_spans` counts positions, not types). Docs shorter
+    keeps one row per window position (the exact-substring view, which
+    counts positions, not types). Docs shorter
     than ``n`` tokens yield their single short gram, so no doc silently
     disappears from the shingle space."""
     if n == 1 and distinct:

@@ -12,11 +12,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from embulk_filter_copy_spark.operators import dedup as D
-from embulk_filter_copy_spark.operators import multimodal as M
 from embulk_filter_copy_spark.operators import sampling as SA
 from embulk_filter_copy_spark.operators import similarity as S
-from embulk_filter_copy_spark.operators import text as TX
-from embulk_filter_copy_spark.queries.common import duck_phash, reps, spark_phash, t
+from embulk_filter_copy_spark.queries.common import duck_phash, t
 
 _TOK_CTE = """
 tok AS (
@@ -563,204 +561,6 @@ SELECT vec_id, comp, vec_id = comp AS keep FROM comp
 """
 
 
-def pipeline_build_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The END-TO-END corpus build a training pipeline actually runs, as
-    one composed plan: quality gate (Gopher rules) → near-dup keep-list
-    (MinHash LSH → components → canonical survivor) → deterministic 50%
-    hash sample → per-source token cap → training-shard assignment. Every
-    stage is the already-verified operator; this query verifies their
-    COMPOSITION (column contracts, hash-salt independence between stages)
-    against one chained CTE oracle. Each stage shuffles only
-    ids/hashes/counts — the composed plan inherits every per-stage 100 TB
-    property."""
-    docs = t(spark, sf_dir, "documents")
-    passing = TX.quality_rules(
-        docs, min_tokens=30, max_tokens=400,
-        min_mean_word_len=3.0, max_mean_word_len=4.5,
-        max_top_token_frac=0.12, min_ttr=0.4,
-    ).filter(F.col("keep")).select("doc_id")
-    docs = docs.join(passing, "doc_id", "left_semi")
-    sig = D.minhash_signatures(docs, k=8)
-    pairs = D.minhash_candidate_pairs(
-        sig, bands=4, rows_per_band=2, max_bucket_size=_MINHASH_CAP
-    )
-    comp = D.connected_components(pairs, docs.select("doc_id"))
-    survivors = comp.filter(F.col("doc_id") == F.col("comp")).select("doc_id")
-    kept = docs.join(survivors, "doc_id", "left_semi")
-    sampled = SA.sample_by_hash(kept, "doc_id", 0.5)
-    capped = SA.cap_tokens_per_group(
-        sampled, budget=15_000, group_col="source", key_col="doc_id"
-    )
-    out = SA.assign_shards(
-        capped.select("doc_id", "source", "n_tok"), "doc_id", 8
-    )
-    return out.select("doc_id", "source", "n_tok", "shard", "pos")
-
-
-def _build_corpus_sql() -> str:
-    ctes, union = _minhash_pairs_ctes(doc_table="gated")
-    return f"""
-WITH RECURSIVE qtk AS (
-  SELECT doc_id,
-         len(string_split(text, ' ')) AS n_tokens,
-         len(list_distinct(string_split(text, ' '))) AS n_distinct,
-         length(text) AS n_chars
-  FROM documents
-),
-qrep AS (
-  SELECT doc_id, max(c) AS top_c, sum(c) AS total_c
-  FROM (
-    SELECT doc_id, tok, count(*) AS c
-    FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-    GROUP BY 1, 2
-  ) GROUP BY doc_id
-),
-gated AS (
-  SELECT d.* FROM documents d
-  JOIN qtk ON qtk.doc_id = d.doc_id
-  JOIN qrep ON qrep.doc_id = d.doc_id
-  WHERE qtk.n_tokens BETWEEN 30 AND 400
-    AND (qtk.n_chars - (qtk.n_tokens - 1)) / CAST(qtk.n_tokens AS DOUBLE)
-        BETWEEN 3.0 AND 4.5
-    AND qrep.top_c / CAST(qrep.total_c AS DOUBLE) <= 0.12
-    AND qtk.n_distinct / CAST(qtk.n_tokens AS DOUBLE) >= 0.4
-),
-{ctes},
-pairs AS ({union}),
-edges AS (
-  SELECT a AS src, b AS dst FROM pairs
-  UNION
-  SELECT b AS src, a AS dst FROM pairs
-),
-reach(node, lbl) AS (
-  SELECT doc_id, doc_id FROM gated
-  UNION
-  SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node
-),
-comp AS (SELECT node AS doc_id, min(lbl) AS comp FROM reach GROUP BY node),
-kept AS (
-  SELECT d.* FROM gated d
-  JOIN comp ON comp.doc_id = d.doc_id AND comp.comp = d.doc_id
-),
-samp AS (
-  SELECT * FROM kept
-  WHERE ({duck_phash("doc_id", "sample:")} % 1000000) < 500000
-),
-tk AS (
-  SELECT doc_id, source, len(string_split(text, ' ')) AS n_tok,
-         {duck_phash("doc_id", "cap:")} AS h
-  FROM samp
-),
-capped AS (
-  SELECT doc_id, source, CAST(n_tok AS INT) AS n_tok
-  FROM (
-    SELECT *, coalesce(sum(n_tok) OVER (
-        PARTITION BY source ORDER BY h, doc_id
-        ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS before
-    FROM tk
-  ) WHERE before < 15000
-),
-sh AS (
-  SELECT doc_id, source, n_tok,
-         CAST({duck_phash("doc_id", "shard:")} % 8 AS INT) AS shard,
-         {duck_phash("doc_id", "shard:")} AS h2
-  FROM capped
-)
-SELECT doc_id, source, n_tok, shard,
-       CAST(row_number() OVER (PARTITION BY shard ORDER BY h2, doc_id) - 1 AS INT) AS pos
-FROM sh
-"""
-
-
-def text_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document quality gate: ten named Gopher/C4-style rule booleans
-    + the keep conjunction. Lexical thresholds are tuned so the synthetic
-    corpus splits both ways (len / word-len / repetition / diversity /
-    stopwords / short-words); the structural Gopher rules (symbol, bullet,
-    ellipsis, alpha) run at paper thresholds — the synthetic corpus has no
-    such structure, so they pass here and split on the structured corpus
-    in tests/test_text_ops.py."""
-    return TX.quality_rules(
-        t(spark, sf_dir, "documents"),
-        min_tokens=30, max_tokens=400,
-        min_mean_word_len=3.0, max_mean_word_len=4.5,
-        max_top_token_frac=0.12, min_ttr=0.4,
-        min_stop_hits=2,
-        max_symbol_word_ratio=0.1,
-        max_bullet_line_frac=0.9,
-        max_ellipsis_line_frac=0.3,
-        min_alpha_word_frac=0.8,
-        max_short_word_frac=0.05,
-    )
-
-
-TEXT_RULES_SQL = """
-WITH tk AS (
-  SELECT doc_id,
-         len(string_split(text, ' ')) AS n_tokens,
-         len(list_distinct(string_split(text, ' '))) AS n_distinct,
-         length(text) AS n_chars,
-         len(list_intersect(list_distinct(string_split(text, ' ')),
-             ['the','a','of','and','to','in','is','that'])) AS stop_hits,
-         (length(text) - length(replace(text, '#', '')))
-           + (length(text) - length(replace(text, '...', ''))) / 3
-           + (length(text) - length(replace(text, '…', ''))) AS symbols,
-         len(list_filter(string_split(text, chr(10)),
-             l -> l LIKE '-%' OR l LIKE '*%' OR l LIKE '•%')) AS bullet_lines,
-         len(list_filter(string_split(text, chr(10)),
-             l -> l LIKE '%...' OR l LIKE '%…')) AS ellipsis_lines,
-         len(string_split(text, chr(10))) AS n_lines,
-         len(list_filter(string_split(text, ' '),
-             w -> regexp_matches(w, '[A-Za-z]'))) AS alpha_words,
-         len(list_filter(string_split(text, ' '),
-             w -> length(w) <= 2)) AS short_words
-  FROM documents
-),
-uni AS (
-  SELECT doc_id, tok, count(*) AS c
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-  GROUP BY 1, 2
-),
-rep AS (
-  SELECT doc_id, max(c) AS top_c, sum(c) AS total_c FROM uni GROUP BY doc_id
-),
-j AS (
-  SELECT tk.doc_id, n_tokens, stop_hits,
-         (n_chars - (n_tokens - 1)) / CAST(n_tokens AS DOUBLE) AS mwl,
-         n_distinct / CAST(n_tokens AS DOUBLE) AS ttr,
-         top_c / CAST(total_c AS DOUBLE) AS ttf,
-         symbols / CAST(n_tokens AS DOUBLE) AS syr,
-         bullet_lines / CAST(n_lines AS DOUBLE) AS blf,
-         ellipsis_lines / CAST(n_lines AS DOUBLE) AS elf,
-         alpha_words / CAST(n_tokens AS DOUBLE) AS awf,
-         short_words / CAST(n_tokens AS DOUBLE) AS swf
-  FROM tk JOIN rep ON rep.doc_id = tk.doc_id
-)
-SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
-       round(mwl, 4) AS mean_word_len,
-       round(ttr, 4) AS ttr,
-       round(ttf, 4) AS top_token_frac,
-       CAST(stop_hits AS INT) AS stop_hits,
-       round(syr, 4) AS symbol_ratio,
-       round(swf, 4) AS short_word_frac,
-       (n_tokens BETWEEN 30 AND 400) AS rule_len,
-       (mwl >= 3.0 AND mwl <= 4.5) AS rule_word_len,
-       (ttf <= 0.12) AS rule_repetition,
-       (ttr >= 0.4) AS rule_diversity,
-       (stop_hits >= 2) AS rule_stopwords,
-       (syr <= 0.1) AS rule_symbol,
-       (blf <= 0.9) AS rule_bullet,
-       (elf <= 0.3) AS rule_ellipsis,
-       (awf >= 0.8) AS rule_alpha,
-       (swf <= 0.05) AS rule_short_words,
-       ((n_tokens BETWEEN 30 AND 400) AND (mwl >= 3.0 AND mwl <= 4.5)
-        AND (ttf <= 0.12) AND (ttr >= 0.4) AND (stop_hits >= 2)
-        AND (syr <= 0.1) AND (blf <= 0.9) AND (elf <= 0.3)
-        AND (awf >= 0.8) AND (swf <= 0.05)) AS keep
-FROM j
-"""
-
-
 def sample_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe 80/10/10 split: near-dup components (MinHash LSH graph)
     routed whole to one split — no near-copy of a training doc can land in
@@ -909,169 +709,6 @@ SELECT query_id, bucket, rank, neighbor_id, cos FROM (
 """
 
 
-# ------------------------------------------------------------- text analysis
-def text_quality_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    q = TX.quality_score(t(spark, sf_dir, "documents"))
-    return q.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        reps(F.avg("ttr"), 4).alias("avg_ttr"),
-        reps(F.avg("quality"), 4).alias("avg_quality"),
-        F.sum("n_subtokens").alias("total_subtokens"),
-    )
-
-
-TEXT_QUALITY_SQL = """
-WITH f AS (
-  SELECT source,
-         len(string_split(text, ' ')) AS n_tokens,
-         len(list_distinct(string_split(text, ' '))) AS n_distinct_tokens,
-         CAST(list_sum(list_transform(string_split(text, ' '),
-              w -> CAST(ceil(length(w) / 4.0) AS BIGINT))) AS BIGINT) AS n_subtokens,
-         length(text) AS n_chars
-  FROM documents
-),
-q AS (
-  SELECT source, n_subtokens,
-         round(n_distinct_tokens::DOUBLE / n_tokens, 4) AS ttr,
-         round(((n_chars - (n_tokens - 1))::DOUBLE / n_tokens), 4) AS mean_word_len,
-         round((CASE WHEN n_chars >= 100 THEN 0.25 ELSE 0 END)
-             + (CASE WHEN n_distinct_tokens::DOUBLE / n_tokens BETWEEN 0.2 AND 0.9 THEN 0.25 ELSE 0 END)
-             + (CASE WHEN (n_chars - (n_tokens - 1))::DOUBLE / n_tokens BETWEEN 2 AND 12 THEN 0.25 ELSE 0 END)
-             + (CASE WHEN n_tokens >= 20 THEN 0.25 ELSE 0 END), 2) AS quality
-  FROM f
-)
-SELECT source, count(*) AS n_docs, round(avg(ttr) + 1e-9, 4) AS avg_ttr,
-       round(avg(quality) + 1e-9, 4) AS avg_quality,
-       CAST(sum(n_subtokens) AS BIGINT) AS total_subtokens
-FROM q GROUP BY source
-"""
-
-
-def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting per language: whitespace tokens, the 4-chars-per-token
-    BPE budget from token_stats, and a BPE-ish regex tokenizer
-    (letter-runs | digit-runs | single punctuation) — all JVM-side."""
-    d = TX.token_stats(t(spark, sf_dir, "documents")).withColumn(
-        "n_bpe_tokens",
-        F.regexp_count("text", F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]")),
-    )
-    return d.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("total_ws_tokens"),
-        F.sum("n_subtokens").alias("total_subtokens"),
-        F.sum("n_bpe_tokens").alias("total_bpe_tokens"),
-        reps(F.avg(F.col("n_bpe_tokens") / F.col("n_tokens")), 4).alias("avg_bpe_per_word"),
-    )
-
-
-TEXT_TOKENS_SQL = """
-WITH f AS (
-  SELECT lang,
-         len(string_split(text, ' ')) AS n_tokens,
-         CAST(list_sum(list_transform(string_split(text, ' '),
-              w -> CAST(ceil(length(w) / 4.0) AS BIGINT))) AS BIGINT) AS n_subtokens,
-         len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS n_bpe_tokens
-  FROM documents
-)
-SELECT lang, count(*) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS total_ws_tokens,
-       CAST(sum(n_subtokens) AS BIGINT) AS total_subtokens,
-       CAST(sum(n_bpe_tokens) AS BIGINT) AS total_bpe_tokens,
-       round(avg(n_bpe_tokens::DOUBLE / n_tokens) + 1e-9, 4) AS avg_bpe_per_word
-FROM f GROUP BY lang
-"""
-
-
-def text_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = TX.lang_id(t(spark, sf_dir, "documents"))
-    return p.groupBy("lang", "pred_lang").agg(F.count(F.lit(1)).alias("n"))
-
-
-def _marker_sql(lang: str) -> str:
-    from embulk_filter_copy_spark.operators.text import LANG_MARKERS
-
-    parts = [
-        f"(CASE WHEN regexp_matches(text, '(^| ){w}( |$)') THEN 1 ELSE 0 END)"
-        for w in LANG_MARKERS[lang]
-    ]
-    return " + ".join(parts)
-
-
-def _lang_id_sql() -> str:
-    from embulk_filter_copy_spark.operators.text import LANG_MARKERS
-
-    langs = list(LANG_MARKERS)
-    hits = ",\n       ".join(f"{_marker_sql(lg)} AS h_{lg}" for lg in langs)
-    best = "greatest(" + ", ".join(f"h_{lg}" for lg in langs) + ")"
-    pred = "'und'"
-    for lg in reversed(langs):
-        pred = f"CASE WHEN h_{lg} = {best} AND {best} > 0 THEN '{lg}' ELSE {pred} END"
-    return f"""
-WITH h AS (SELECT lang, {hits} FROM documents)
-SELECT lang, pred_lang, count(*) AS n
-FROM (SELECT lang, {pred} AS pred_lang FROM h)
-GROUP BY lang, pred_lang
-"""
-
-
-def text_fingerprint_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = t(spark, sf_dir, "documents")
-    fp = TX.fingerprint(docs).join(docs.select("doc_id", "source"), "doc_id")
-    return fp.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("fingerprint").alias("n_fingerprints"),
-        F.min("fingerprint").alias("min_fingerprint"),
-    )
-
-
-TEXT_FP_SQL = f"""
-WITH g AS (
-  SELECT doc_id, source,
-         [array_to_string(toks[i:i+2], ' ') FOR i IN range(1, greatest(len(toks) - 1, 2))] AS grams
-  FROM (SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents)
-),
-fp AS (
-  SELECT doc_id, source,
-         list_aggregate(list_transform(grams, gg -> {duck_phash('gg', 'fp:')}), 'min') AS fingerprint
-  FROM g
-)
-SELECT source, count(*) AS n_docs, count(DISTINCT fingerprint) AS n_fingerprints,
-       min(fingerprint) AS min_fingerprint
-FROM fp GROUP BY source
-"""
-
-
-# ------------------------------------------------------------- multimodal
-def multimodal_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    assets = M.to_media_assets(t(spark, sf_dir, "documents"), "doc_id", "text", "text")
-    return M.extract_metadata(assets)
-
-
-MULTIMODAL_META_SQL = """
-SELECT doc_id AS asset_id, 'text' AS media_type,
-       CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
-       sha256(text) AS sha256,
-       lower(hex(encode(substr(text, 1, 4)))) AS magic
-FROM documents
-"""
-
-
-def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    assets = M.to_media_assets(t(spark, sf_dir, "documents"), "doc_id", "text", "text")
-    feats = M.decode_and_featurize(assets, n_features=8)
-    return feats.select(
-        "asset_id", F.posexplode("feature").alias("pos", "fv")
-    ).select("asset_id", "pos", F.round(F.col("fv").cast("double"), 4).alias("fv"))
-
-
-MULTIMODAL_FEAT_SQL = """
-WITH s AS (SELECT doc_id AS asset_id, sha256(text) AS sha FROM documents)
-SELECT asset_id, CAST(i AS INT) AS pos,
-       round((('0x' || substr(sha, 2 * i + 1, 2))::INT) / 255.0, 4) AS fv
-FROM s, range(8) t(i)
-"""
-
-
 # ------------------------------------------------------------- sampling
 def sample_docs_by_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 25% Bernoulli corpus sample (portable-hash filter —
@@ -1121,106 +758,6 @@ SELECT doc_id, source, n_tok,
             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / 256.0)
             AS BIGINT) AS pack_id
 FROM (SELECT doc_id, source, len(string_split(text, ' ')) AS n_tok FROM documents)
-"""
-
-
-# ------------------------------------------------------------- pii scrub
-def text_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inject deterministic synthetic PII (the corpus has none), scrub it
-    with the regexp chain, and return per-category counts + a digest of the
-    cleaned text."""
-    did = F.col("doc_id")
-    docs = t(spark, sf_dir, "documents").withColumn(
-        "text",
-        F.concat(
-            F.col("text"),
-            F.when(did % 5 == 0,
-                   F.concat(F.lit(" contact user"), did, F.lit("@example.com"))
-                   ).otherwise(F.lit("")),
-            F.when(did % 7 == 0,
-                   F.concat(F.lit(" host 10.0."), (did % 250), F.lit(".1"))
-                   ).otherwise(F.lit("")),
-            F.when(did % 11 == 0, F.lit(" call 555-867-5309")).otherwise(F.lit("")),
-        ),
-    )
-    out = TX.scrub_pii(docs)
-    return out.select(
-        "doc_id",
-        F.col("n_email").cast("int").alias("n_email"),
-        F.col("n_ipv4").cast("int").alias("n_ipv4"),
-        F.col("n_phone").cast("int").alias("n_phone"),
-        F.md5("clean_text").alias("clean_md5"),
-    )
-
-
-SCRUB_PII_SQL = r"""
-WITH injected AS (
-  SELECT doc_id,
-         text
-         || CASE WHEN doc_id % 5 = 0
-                 THEN ' contact user' || doc_id || '@example.com' ELSE '' END
-         || CASE WHEN doc_id % 7 = 0
-                 THEN ' host 10.0.' || (doc_id % 250) || '.1' ELSE '' END
-         || CASE WHEN doc_id % 11 = 0 THEN ' call 555-867-5309' ELSE '' END
-         AS text
-  FROM documents
-)
-SELECT doc_id,
-       CAST(len(regexp_extract_all(text,
-            '[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}')) AS INT) AS n_email,
-       CAST(len(regexp_extract_all(text,
-            '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS INT) AS n_ipv4,
-       CAST(len(regexp_extract_all(text,
-            '\b\d{3}-\d{3}-\d{4}\b')) AS INT) AS n_phone,
-       md5(regexp_replace(regexp_replace(regexp_replace(text,
-            '[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-            '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g'),
-            '\b\d{3}-\d{3}-\d{4}\b', '<PHONE>', 'g')) AS clean_md5
-FROM injected
-"""
-
-
-# ------------------------------------------------------------- repetition
-def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source aggregates of the Gopher-style top-unigram / top-bigram
-    repetition fractions."""
-    docs = t(spark, sf_dir, "documents")
-    rep = TX.repetition_stats(docs)
-    joined = rep.join(docs.select("doc_id", "source"), "doc_id")
-    return joined.groupBy("source").agg(
-        F.count("*").alias("n_docs"),
-        reps(F.avg("top_token_frac"), 4).alias("avg_top_token_frac"),
-        reps(F.avg("top_bigram_frac"), 4).alias("avg_top_bigram_frac"),
-        reps(F.max("top_token_frac"), 4).alias("max_top_token_frac"),
-    )
-
-
-REPETITION_SQL = """
-WITH uni AS (
-  SELECT doc_id, tok, count(*) AS c
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents)
-  GROUP BY 1, 2
-),
-ud AS (SELECT doc_id, max(c)::DOUBLE / sum(c) AS top_token_frac FROM uni GROUP BY 1),
-bg AS (
-  SELECT doc_id, g, count(*) AS c
-  FROM (
-    SELECT doc_id,
-           unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i + 1])) AS g
-    FROM (SELECT doc_id, string_split(text, ' ') AS tk FROM documents)
-    WHERE len(tk) >= 2)
-  GROUP BY 1, 2
-),
-bd AS (SELECT doc_id, max(c)::DOUBLE / sum(c) AS top_bigram_frac FROM bg GROUP BY 1),
-j AS (
-  SELECT d.source, ud.top_token_frac, bd.top_bigram_frac
-  FROM documents d JOIN ud USING (doc_id) LEFT JOIN bd USING (doc_id)
-)
-SELECT source, count(*) AS n_docs,
-       round(avg(top_token_frac) + 1e-9, 4) AS avg_top_token_frac,
-       round(avg(top_bigram_frac) + 1e-9, 4) AS avg_top_bigram_frac,
-       round(max(top_token_frac) + 1e-9, 4) AS max_top_token_frac
-FROM j GROUP BY source
 """
 
 
@@ -1320,89 +857,6 @@ SELECT doc_id, {mins} FROM tok GROUP BY doc_id
 """
 
 
-# ------------------------------------------------- decontamination / spans
-def _bench_split(spark: SparkSession, sf_dir: str):
-    """Deterministic 10% 'benchmark' carve-out of documents (phash salt
-    'bench:') — stands in for the eval suites a decontamination pass
-    screens against. Returns (corpus, bench)."""
-    docs = t(spark, sf_dir, "documents")
-    is_bench = F.expr(f"pmod({spark_phash('doc_id', 'bench:')}, 10) = 0")
-    return docs.filter(~is_bench), docs.filter(is_bench)
-
-
-def decontam_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trigram decontamination of the corpus against the carved-out bench
-    set: broadcast bench shingle hashes, count per-doc hits. n=3 because
-    the synthetic vocab is ~31 words (13-grams would never repeat); the
-    operator defaults to n=13 for real text."""
-    from embulk_filter_copy_spark.operators import decontam as DC
-
-    corpus, bench = _bench_split(spark, sf_dir)
-    return DC.ngram_overlap(corpus, bench, n=3)
-
-
-def _tri_cte(dist: bool) -> str:
-    """DuckDB word-trigram shingles replaying `ngram_shingles(n=3)`:
-    positions 1..len-2 (one short gram for <3-token docs)."""
-    inner = (
-        "SELECT doc_id, unnest([array_to_string(toks[i:i+2], ' ')\n"
-        "           FOR i IN range(1, greatest(len(toks) - 1, 2))]) AS sh\n"
-        "    FROM g"
-    )
-    body = f"SELECT DISTINCT doc_id, sh FROM ({inner})" if dist else f"SELECT doc_id, sh FROM ({inner})"
-    return (
-        "g AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),\n"
-        f"sh3 AS ({body} WHERE trim(sh) <> '')"
-    )
-
-
-DECONTAM_SQL = f"""
-WITH {_tri_cte(dist=True)},
-h AS (SELECT doc_id, {duck_phash('sh', 'dc:')} AS h,
-             ({duck_phash('doc_id', 'bench:')} % 10 = 0) AS is_bench
-      FROM sh3),
-bh AS (SELECT DISTINCT h FROM h WHERE is_bench),
-d AS (SELECT doc_id, h FROM h WHERE NOT is_bench),
-corpus AS (SELECT doc_id FROM documents
-           WHERE NOT ({duck_phash('doc_id', 'bench:')} % 10 = 0)),
-sizes AS (SELECT doc_id, count(*) AS n_grams FROM d GROUP BY 1),
-hits AS (SELECT d.doc_id, count(*) AS n_hit FROM d JOIN bh USING (h) GROUP BY 1)
-SELECT c.doc_id, coalesce(s.n_grams, 0) AS n_grams,
-       coalesce(n_hit, 0) AS n_hit_grams,
-       CASE WHEN coalesce(s.n_grams, 0) = 0 THEN 0.0
-            ELSE round(coalesce(n_hit, 0)::DOUBLE / s.n_grams, 6) END AS contamination
-FROM corpus c
-LEFT JOIN sizes s ON s.doc_id = c.doc_id
-LEFT JOIN hits ON hits.doc_id = c.doc_id
-"""
-
-
-def dedup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-substring duplication over 3-token windows (positional, not
-    set-based — boilerplate repeated across docs counts every occurrence)."""
-    from embulk_filter_copy_spark.operators import decontam as DC
-
-    return DC.duplicated_spans(t(spark, sf_dir, "documents"), w=3)
-
-
-SPAN_STATS_SQL = f"""
-WITH {_tri_cte(dist=False)},
-pos AS (SELECT doc_id, {duck_phash('sh', 'dc:')} AS h FROM sh3),
-cross_h AS (SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS nd FROM pos GROUP BY h)
-            WHERE nd >= 2),
-n_all AS (SELECT doc_id, count(*) AS n_windows FROM pos GROUP BY 1),
-n_dup AS (SELECT doc_id, count(*) AS n_dup
-          FROM pos WHERE h IN (SELECT h FROM cross_h) GROUP BY 1)
-SELECT docs.doc_id, coalesce(a.n_windows, 0) AS n_windows,
-       coalesce(d.n_dup, 0) AS n_dup_windows,
-       CASE WHEN coalesce(a.n_windows, 0) = 0 THEN 0.0
-            ELSE round(coalesce(d.n_dup, 0)::DOUBLE / a.n_windows, 6) END AS dup_fraction
-FROM (SELECT doc_id FROM documents) docs
-LEFT JOIN n_all a ON a.doc_id = docs.doc_id
-LEFT JOIN n_dup d ON d.doc_id = docs.doc_id
-"""
-
-
 # ------------------------------------------------- shards / mixture
 def sample_assign_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     return SA.assign_shards(t(spark, sf_dir, "documents"), "doc_id", 8).select(
@@ -1490,115 +944,12 @@ QUERIES = {
     "dedup_embedding_kmeans": (dedup_embedding_kmeans, DEDUP_EMB_KMEANS_SQL),
     "dedup_embedding_keep_list": (dedup_embedding_keep_list, DEDUP_EMB_KEEP_SQL),
     "sample_leakage_safe_split": (sample_leakage_safe_split, _leakage_split_sql()),
-    "pipeline_build_corpus": (pipeline_build_corpus, _build_corpus_sql()),
-    "text_quality_rules": (text_quality_rules, TEXT_RULES_SQL),
     "sample_domain_token_cap": (sample_domain_token_cap, DOMAIN_CAP_SQL),
     "ann_ivf_recall": (ann_ivf_recall, ANN_RECALL_SQL),
-    "text_token_counts": (text_token_counts, TEXT_TOKENS_SQL),
-    "text_quality_by_source": (text_quality_by_source, TEXT_QUALITY_SQL),
-    "text_lang_id_confusion": (text_lang_id_confusion, _lang_id_sql()),
-    "text_fingerprint_stats": (text_fingerprint_stats, TEXT_FP_SQL),
-    "multimodal_metadata": (multimodal_metadata, MULTIMODAL_META_SQL),
-    "multimodal_features": (multimodal_features, MULTIMODAL_FEAT_SQL),
     "sample_docs_by_hash": (sample_docs_by_hash, SAMPLE_HASH_SQL),
     "sample_stratified_docs": (sample_stratified_docs, SAMPLE_STRAT_SQL),
     "pack_training_sequences": (pack_training_sequences, PACK_SEQ_SQL),
-    "text_scrub_pii": (text_scrub_pii, SCRUB_PII_SQL),
-    "text_repetition_stats": (text_repetition_stats, REPETITION_SQL),
     "dedup_incremental_signatures": (dedup_incremental_signatures, _inc_sig_sql(8)),
-    "decontam_ngram_overlap": (decontam_ngram_overlap, DECONTAM_SQL),
-    "dedup_span_stats": (dedup_span_stats, SPAN_STATS_SQL),
     "sample_assign_shards": (sample_assign_shards, ASSIGN_SHARDS_SQL),
     "sample_mixture_weights": (sample_mixture_weights, _mixture_sql()),
 }
-
-
-# ------------------------------------------------- corpus-LM quality
-def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean unigram log-probability of each doc under the corpus's own
-    add-one-smoothed unigram model (the KenLM-free CCNet-style quality
-    signal)."""
-    out = TX.unigram_logprob(t(spark, sf_dir, "documents"))
-    return out.select(
-        "doc_id", "n_tokens", reps(F.col("mean_logprob"), 6).alias("mean_logprob")
-    )
-
-
-UNIGRAM_LP_SQL = """
-WITH tokp AS (
-  SELECT doc_id, tok FROM (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-  ) WHERE tok <> ''
-),
-vocab AS (SELECT tok, count(*) AS cnt FROM tokp GROUP BY tok),
-tot AS (SELECT sum(cnt) AS n_total, count(*) AS v_size FROM vocab),
-lp AS (SELECT tok, ln((cnt + 1)::DOUBLE / (n_total + v_size)) AS lp FROM vocab, tot),
-per AS (
-  SELECT doc_id, count(*) AS n_tokens, round(avg(lp) + 1e-9, 6) AS mean_logprob
-  FROM tokp JOIN lp USING (tok) GROUP BY doc_id
-)
-SELECT d.doc_id, coalesce(per.n_tokens, 0) AS n_tokens, per.mean_logprob
-FROM (SELECT doc_id FROM documents) d LEFT JOIN per ON per.doc_id = d.doc_id
-"""
-
-QUERIES["text_unigram_logprob"] = (text_unigram_logprob, UNIGRAM_LP_SQL)
-
-
-# ------------------------------------------------- span removal
-def dedup_trim_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Remove cross-doc duplicated 3-token spans from every document (the
-    removal step of substring dedup, window-hash approximation)."""
-    from embulk_filter_copy_spark.operators import decontam as DC
-
-    return DC.trim_duplicated_spans(t(spark, sf_dir, "documents"), w=3)
-
-
-# DuckDB replay: same window starts / hash, covered = union of [s, s+2]
-# 0-based token indices, kept tokens re-joined in order.
-TRIM_SPANS_SQL = f"""
-WITH g AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-posu AS (
-  SELECT doc_id,
-         unnest([{{'s': i - 1, 'sh': array_to_string(toks[i:i+2], ' ')}}
-                 FOR i IN range(1, greatest(len(toks) - 1, 2))]) AS u
-  FROM g
-),
-pos AS (
-  SELECT doc_id, u.s AS s, {duck_phash("u.sh", 'dc:')} AS h
-  FROM posu WHERE trim(u.sh) <> ''
-),
-cross_h AS (SELECT h FROM (SELECT h, count(DISTINCT doc_id) AS nd FROM pos GROUP BY h)
-            WHERE nd >= 2),
-cov AS (
-  SELECT DISTINCT doc_id, s + unnest([0, 1, 2]) AS idx
-  FROM pos WHERE h IN (SELECT h FROM cross_h)
-),
-toku AS (
-  SELECT doc_id, unnest([{{'idx': i - 1, 'tok': toks[i]}}
-                         FOR i IN range(1, len(toks) + 1)]) AS u
-  FROM g
-),
-tokpos AS (SELECT doc_id, u.idx AS idx, u.tok AS tok FROM toku),
-kept AS (
-  SELECT t.doc_id, t.idx, t.tok
-  FROM tokpos t LEFT JOIN cov ON cov.doc_id = t.doc_id AND cov.idx = t.idx
-  WHERE cov.idx IS NULL
-),
-agg AS (
-  SELECT doc_id, string_agg(tok, ' ' ORDER BY idx) AS text_trimmed
-  FROM kept GROUP BY doc_id
-),
-removed AS (
-  SELECT c.doc_id, count(*) AS n_removed
-  FROM cov c JOIN g ON g.doc_id = c.doc_id
-  WHERE c.idx < len(g.toks) GROUP BY c.doc_id
-)
-SELECT g.doc_id,
-       coalesce(agg.text_trimmed, '') AS text_trimmed,
-       CAST(len(g.toks) AS INT) AS n_tokens,
-       CAST(coalesce(removed.n_removed, 0) AS INT) AS n_tokens_removed
-FROM g LEFT JOIN agg ON agg.doc_id = g.doc_id
-LEFT JOIN removed ON removed.doc_id = g.doc_id
-"""
-
-QUERIES["dedup_trim_spans"] = (dedup_trim_spans, TRIM_SPANS_SQL)

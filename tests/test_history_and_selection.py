@@ -1,12 +1,11 @@
-"""Semantic tests for the SCD2 history operator, decontamination /
-span-duplication metrics, and the shard/mixture selection operators —
-edge cases the oracle parity suite (cross-engine equality) can't see."""
+"""Semantic tests for the SCD2 history operator and the shard/mixture
+selection operators — edge cases the oracle parity suite (cross-engine
+equality) can't see."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from embulk_filter_copy_spark.cdc.history import scd2_history, snapshot_as_of
-from embulk_filter_copy_spark.operators import decontam as DC
 from embulk_filter_copy_spark.operators import sampling as SA
 
 
@@ -167,71 +166,6 @@ def test_bucket_columns_must_be_key_subset(spark, tmp_path):
         bucket_columns=["a"],
     )
     assert t.bucket_columns == ["a"] and t.key_columns == ["a", "b"]
-
-
-# ------------------------------------------------------- decontamination
-@pytest.fixture(scope="module")
-def corpus_bench(spark):
-    corpus = spark.createDataFrame(
-        [
-            (0, "the quick brown fox jumps over the lazy dog"),
-            (1, "completely novel text with unique words here"),
-            (2, "quick brown fox ate food"),
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(100, "a quick brown fox appears")], "doc_id long, text string"
-    )
-    return corpus, bench
-
-
-def test_ngram_overlap_counts_and_zero_rows(corpus_bench):
-    corpus, bench = corpus_bench
-    out = {r["doc_id"]: r for r in DC.ngram_overlap(corpus, bench, n=3).collect()}
-    # every corpus doc present, including zero-overlap doc 1
-    assert set(out) == {0, 1, 2}
-    assert out[1]["n_hit_grams"] == 0 and out[1]["contamination"] == 0.0
-    # bench trigrams: {a quick brown, quick brown fox, brown fox appears}
-    # doc 0 distinct trigrams include 'quick brown fox' -> 1 hit of 7 grams
-    assert out[0]["n_hit_grams"] == 1 and out[0]["n_grams"] == 7
-    assert out[2]["n_hit_grams"] == 1 and out[2]["n_grams"] == 3
-    # shuffle-join fallback agrees with the broadcast path
-    out2 = {
-        r["doc_id"]: (r["n_hit_grams"], r["n_grams"])
-        for r in DC.ngram_overlap(
-            corpus, bench, n=3, broadcast_bench=False
-        ).collect()
-    }
-    assert out2 == {k: (v["n_hit_grams"], v["n_grams"]) for k, v in out.items()}
-
-
-def test_duplicated_spans_positional_semantics(spark):
-    # doc 0 repeats 'x y z' twice (positions count separately);
-    # doc 1 shares it once; doc 2 shares nothing
-    df = spark.createDataFrame(
-        [
-            (0, "x y z q x y z"),
-            (1, "p x y z r"),
-            (2, "totally different words entirely"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in DC.duplicated_spans(df, w=3).collect()}
-    # doc 0 windows: xyz yzq zqx qxy xyz -> the two xyz positions + none else
-    assert out[0]["n_windows"] == 5 and out[0]["n_dup_windows"] == 2
-    assert out[1]["n_windows"] == 3 and out[1]["n_dup_windows"] == 1
-    assert out[2]["n_dup_windows"] == 0 and out[2]["dup_fraction"] == 0.0
-
-
-def test_within_doc_repetition_not_counted_as_duplication(spark):
-    # a phrase repeated ONLY inside one doc is repetition, not duplication
-    df = spark.createDataFrame(
-        [(0, "a b c a b c"), (1, "unrelated different tokens")],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in DC.duplicated_spans(df, w=3).collect()}
-    assert out[0]["n_dup_windows"] == 0
 
 
 # --------------------------------------------------------- shards / mixture
@@ -412,21 +346,6 @@ def test_history_batch_applies_ddl_before_following_data(spark, tmp_path):
     assert read_history(t).count() == n
 
 
-def test_decontam_emits_rows_for_empty_docs(spark):
-    df = spark.createDataFrame(
-        [(0, "alpha beta gamma delta"), (1, ""), (2, "   ")],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame([(9, "beta gamma delta")], "doc_id long, text string")
-    ov = {r["doc_id"]: r for r in DC.ngram_overlap(df, bench, n=3).collect()}
-    assert set(ov) == {0, 1, 2}
-    assert ov[1]["n_grams"] == 0 and ov[1]["contamination"] == 0.0
-    assert ov[2]["n_grams"] == 0 and ov[2]["contamination"] == 0.0
-    sp = {r["doc_id"]: r for r in DC.duplicated_spans(df, w=3).collect()}
-    assert set(sp) == {0, 1, 2}
-    assert sp[1]["n_windows"] == 0 and sp[1]["dup_fraction"] == 0.0
-
-
 def test_mixture_sample_int_group_column(spark):
     df = spark.range(0, 300).select(
         F.concat(F.lit("d"), "id").alias("doc_id"),
@@ -533,73 +452,6 @@ def test_history_appends_write_per_file_lineage(spark, hist_table, changes):
     # per-file entries carry bucket + LSN range from footer stats
     assert all("bucket" in p and p["lsn_max"] is not None for p in e0["partitions"])
     assert max(p["lsn_max"] for p in e0["partitions"]) == 3
-
-
-def test_trim_duplicated_spans_removes_shared_not_unique(spark):
-    df = spark.createDataFrame(
-        [
-            (0, "x y z unique0 tail0 words0"),
-            (1, "pre1 x y z post1 more1"),
-            (2, "all original text here nothing shared"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in DC.trim_duplicated_spans(df, w=3).collect()}
-    # the shared 'x y z' window is removed from both docs
-    assert out[0]["text_trimmed"] == "unique0 tail0 words0"
-    assert out[0]["n_tokens"] == 6 and out[0]["n_tokens_removed"] == 3
-    # only the shared window's tokens (x y z) go; pre1/post1 survive
-    assert out[1]["text_trimmed"] == "pre1 post1 more1"
-    assert out[1]["n_tokens_removed"] == 3
-    # untouched doc passes through verbatim with zero removed
-    assert out[2]["text_trimmed"] == df.collect()[2]["text"]
-    assert out[2]["n_tokens_removed"] == 0
-
-
-def test_trim_spans_overlapping_windows_union_coverage(spark):
-    # docs share two overlapping trigrams 'a b c' and 'b c d' -> coverage
-    # union is tokens a..d, counted once each
-    df = spark.createDataFrame(
-        [(0, "a b c d e f"), (1, "z a b c d y")],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in DC.trim_duplicated_spans(df, w=3).collect()}
-    assert out[0]["text_trimmed"] == "e f" and out[0]["n_tokens_removed"] == 4
-
-
-def test_trim_spans_single_shingle_pass(spark):
-    """The position frame is checkpointed: the downstream plan must contain
-    NO Generate (posexplode) node — re-deriving it would re-shingle the
-    corpus, a second full scan at 100 TB."""
-    import contextlib
-    import io
-
-    df = spark.createDataFrame(
-        [(0, "a b c d e"), (1, "z a b c y")], "doc_id long, text string"
-    )
-    out = DC.trim_duplicated_spans(df, w=3)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    assert "Generate" not in buf.getvalue()
-
-
-def test_trim_spans_long_mostly_duplicated_doc(spark):
-    """A long, heavily-duplicated doc must trim in one interval pass — the
-    old exploded-position membership test was O(n_tokens x covered) and
-    crawled here. 20k tokens, ~all covered -> a handful of merged
-    intervals, linear rebuild."""
-    shared = " ".join(f"t{i % 37}x{i % 101}" for i in range(20_000))
-    df = spark.createDataFrame(
-        [(0, shared + " tail0 only0 here0"), (1, shared + " other1 ending1")],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in DC.trim_duplicated_spans(df, w=20).collect()}
-    # the shared 20k-token prefix is fully covered; the unique tails survive
-    assert out[0]["n_tokens"] == 20_003
-    assert out[0]["n_tokens_removed"] >= 20_000 - 20
-    assert out[0]["text_trimmed"].endswith("tail0 only0 here0")
-    assert out[1]["text_trimmed"].endswith("other1 ending1")
 
 
 def test_refresh_follows_store_schema_evolution(spark, tmp_path):

@@ -6,9 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from embulk_filter_copy_spark.operators import dedup as D
-from embulk_filter_copy_spark.operators import multimodal as M
 from embulk_filter_copy_spark.operators import similarity as S
-from embulk_filter_copy_spark.operators import text as TX
 
 
 @pytest.fixture(scope="module")
@@ -125,47 +123,6 @@ def test_ann_ivf_cells_and_recall(spark):
                for r in S.ann_bruteforce_topk(emb, queries, k=10).collect()}
     ivf1 = {(r["query_id"], r["neighbor_id"]) for r in ivf if r["rank"] == 1}
     assert ivf1 and ivf1 <= brute10
-
-
-def test_text_quality_and_tokens(docs):
-    q = {r["doc_id"]: r for r in TX.quality_score(docs).collect()}
-    assert q[0]["n_tokens"] == 6 and q[0]["n_distinct_tokens"] == 6
-    assert q[0]["ttr"] == 1.0
-    assert 0 <= q[0]["quality"] <= 1
-    assert q[0]["n_subtokens"] == sum(-(-len(w) // 4) for w in
-                                      "alpha beta gamma delta epsilon zeta".split())
-
-
-def test_lang_id_markers(spark):
-    rows = [
-        (0, "the cat sat on the mat", "en"),
-        (1, "el gato y la casa de madrid", "es"),
-        (2, "zzz qqq www", "und"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string, expected string")
-    got = {r["doc_id"]: r["pred_lang"] for r in TX.lang_id(df).collect()}
-    assert got == {0: "en", 1: "es", 2: "und"}
-
-
-def test_fingerprint_equal_for_clones(docs):
-    fp = {r["doc_id"]: r["fingerprint"] for r in TX.fingerprint(docs).collect()}
-    assert fp[0] == fp[1] and fp[0] != fp[3]
-
-
-def test_multimodal_metadata_and_stub_features(spark):
-    df = spark.createDataFrame([(1, "hello"), (2, None)], "doc_id long, text string")
-    assets = M.to_media_assets(df, "doc_id", "text", "text")
-    meta = {r["asset_id"]: r for r in M.extract_metadata(assets).collect()}
-    assert meta[1]["byte_len"] == 5 and meta[1]["magic"] == "68656c6c"
-    import hashlib
-
-    assert meta[1]["sha256"] == hashlib.sha256(b"hello").hexdigest()
-    assert meta[2]["byte_len"] == 0 and meta[2]["sha256"] is None
-
-    feats = {r["asset_id"]: r for r in M.decode_and_featurize(assets, n_features=4).collect()}
-    assert len(feats[1]["feature"]) == 4
-    assert all(0 <= x <= 1 for x in feats[1]["feature"])
-    assert feats[1]["decoder"] == "stub-sha256"
 
 
 def test_simhash_banding_is_lossless(spark):
@@ -568,81 +525,6 @@ def test_pack_sequences_matches_reference_blocking(spark):
 
 
 # ----------------------------------------------------------- pii / repetition
-def test_scrub_pii_replaces_and_counts(spark):
-    df = spark.createDataFrame(
-        [
-            (0, "mail me at bob.smith+x@corp.example.org today"),
-            (1, "server 192.168.0.1 and backup 10.0.0.2"),
-            (2, "call 555-123-4567 now"),
-            (3, "nothing sensitive here"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in TX.scrub_pii(df).collect()}
-    assert got[0]["clean_text"] == "mail me at <EMAIL> today"
-    assert got[0]["n_email"] == 1 and got[0]["n_ipv4"] == 0
-    assert got[1]["clean_text"] == "server <IP> and backup <IP>"
-    assert got[1]["n_ipv4"] == 2
-    assert got[2]["clean_text"] == "call <PHONE> now" and got[2]["n_phone"] == 1
-    assert got[3]["clean_text"] == "nothing sensitive here"
-    assert got[3]["n_email"] == got[3]["n_ipv4"] == got[3]["n_phone"] == 0
-
-
-def test_repetition_stats_hand_computed(spark):
-    df = spark.createDataFrame(
-        [(0, "a a a b"), (1, "x y x y"), (2, "solo")],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in TX.repetition_stats(df).collect()}
-    assert abs(got[0]["top_token_frac"] - 3 / 4) < 1e-12
-    assert abs(got[0]["top_bigram_frac"] - 2 / 3) < 1e-12   # 'a a' twice of 3
-    assert abs(got[1]["top_token_frac"] - 2 / 4) < 1e-12
-    assert abs(got[1]["top_bigram_frac"] - 2 / 3) < 1e-12   # 'x y' twice of 3
-    assert got[2]["top_token_frac"] == 1.0
-    assert got[2]["top_bigram_frac"] is None                # no bigrams
-
-
-def test_unigram_logprob_ranks_in_distribution_text_higher(spark):
-    from embulk_filter_copy_spark.operators import text as TX2
-
-    df = spark.createDataFrame(
-        [
-            (0, "alpha beta alpha beta alpha beta"),   # common tokens
-            (1, "alpha beta gamma alpha beta gamma"),
-            (2, "zzqx wvvk pqrst zzyy mnopq hjkl"),    # all-rare garble
-            (3, ""),                                   # empty: no evidence
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in TX2.unigram_logprob(df).collect()}
-    assert set(out) == {0, 1, 2, 3}
-    assert out[0]["mean_logprob"] > out[2]["mean_logprob"]
-    assert out[1]["mean_logprob"] > out[2]["mean_logprob"]
-    assert out[3]["n_tokens"] == 0 and out[3]["mean_logprob"] is None
-    # frozen-vocab scoring: score doc 2 under a vocab that has seen it a lot
-    from pyspark.sql import functions as F2
-
-    vocab = spark.createDataFrame(
-        [("zzqx", 100), ("wvvk", 100), ("pqrst", 100), ("zzyy", 100),
-         ("mnopq", 100), ("hjkl", 100), ("alpha", 1)],
-        "tok string, cnt long",
-    )
-    frozen = {r["doc_id"]: r for r in TX2.unigram_logprob(df, vocab=vocab).collect()}
-    assert frozen[2]["mean_logprob"] > frozen[0]["mean_logprob"]
-
-
-def test_unigram_logprob_unknown_tokens_get_smoothed_mass(spark):
-    from embulk_filter_copy_spark.operators import text as TX2
-
-    df = spark.createDataFrame([(0, "known unknown")], "doc_id long, text string")
-    vocab = spark.createDataFrame([("known", 99)], "tok string, cnt long")
-    row = TX2.unigram_logprob(df, vocab=vocab).collect()[0]
-    import math
-    # p(known) = 100/100, p(unknown) = 1/100 -> mean = (0 + ln(0.01)) / 2
-    assert row["n_tokens"] == 2
-    assert abs(row["mean_logprob"] - (math.log(100 / 100) + math.log(1 / 100)) / 2) < 1e-9
-
-
 def test_kmeans_fixture_matches_fresh_fit(spark):
     """The frozen centroid fixture (the oracle's quantizer for
     `ann_ivf_kmeans_topk` / `dedup_embedding_kmeans`) must equal a fresh
@@ -773,78 +655,3 @@ def test_ann_recall_report_full_probe_is_exact(spark):
     rep1 = S.ann_recall_report(emb, queries, n_cells=4, k=5, nprobe=1).collect()
     assert len(rep1) == 3
     assert all(0.0 <= r["recall"] <= 1.0 for r in rep1)
-
-
-def test_quality_rules_named_verdicts(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-            (2, "spam spam spam spam spam spam spam spam spam spam"),
-            (3, "ok"),  # too short
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in TX.quality_rules(
-        df, min_tokens=5, max_tokens=100, min_mean_word_len=2.0,
-        max_mean_word_len=10.0, max_top_token_frac=0.5, min_ttr=0.3,
-    ).collect()}
-    assert out[1]["keep"] and all(
-        out[1][c] for c in ("rule_len", "rule_word_len",
-                            "rule_repetition", "rule_diversity"))
-    # the degenerate doc fails EXACTLY the repetition + diversity rules
-    assert not out[2]["keep"]
-    assert out[2]["rule_len"] and out[2]["rule_word_len"]
-    assert not out[2]["rule_repetition"] and not out[2]["rule_diversity"]
-    assert not out[3]["keep"] and not out[3]["rule_len"]
-
-
-def test_quality_rules_gopher_structural_set(spark):
-    """Round-5 extension: the structural Gopher heuristics (stopwords,
-    symbol ratio, bullet lines, ellipsis lines, alpha words, short words)
-    each split a structured corpus both ways at paper thresholds, and a
-    doc failing exactly one rule reports exactly that rule."""
-    good = ("the quick brown fox jumps over a lazy dog and keeps running "
-            "through the field while birds watch from tall trees nearby")
-    docs = [
-        (1, good),
-        # no stop words at all
-        (2, "quick brown foxes jump over lazy dogs chasing rabbits "
-            "through fields while birds watch from tall trees nearby"),
-        # symbol spam: hash marks attached to words (tokens stay alphabetic)
-        (3, good.replace("fox", "fox#").replace("dog", "dog#")
-              .replace("birds", "birds#").replace("field", "field#")
-              .replace("trees", "trees#")),
-        # bullet-list body: every line starts with a bullet
-        (4, "\n".join("- the point number %d of a list" % i
-                      for i in range(10))),
-        # 4 of 10 lines trail off with an ellipsis (>0.3 but few symbols)
-        (5, "\n".join(
-            "the story continues with lots of long interesting words"
-            + ("..." if i < 4 else ".") for i in range(10))),
-        # mostly numeric tokens (long ones, so short-word density stays low)
-        (6, "the 11111 22222 33333 44444 55555 66666 77777 88888 99999 "
-            "10101 12121 13131 14141 15151 16161 17171 18181 19191 a of"),
-        # stub/fragment density: mostly <=2-char tokens
-        (7, "the a an it is to of in on at by we he a an it is to of a"),
-    ]
-    out = {r["doc_id"]: r for r in TX.quality_rules(
-        spark.createDataFrame(docs, "doc_id long, text string"),
-        min_tokens=5, max_tokens=500,
-        min_mean_word_len=1.0, max_mean_word_len=12.0,
-        max_top_token_frac=0.9, min_ttr=0.05,
-        min_stop_hits=2, max_symbol_word_ratio=0.1,
-        max_bullet_line_frac=0.9, max_ellipsis_line_frac=0.3,
-        min_alpha_word_frac=0.8, max_short_word_frac=0.5,
-    ).collect()}
-    assert out[1]["keep"]
-    structural = ("rule_stopwords", "rule_symbol", "rule_bullet",
-                  "rule_ellipsis", "rule_alpha", "rule_short_words")
-    for rule, bad_doc in zip(structural, (2, 3, 4, 5, 6, 7)):
-        assert not out[bad_doc][rule], (rule, bad_doc, out[bad_doc])
-        assert not out[bad_doc]["keep"]
-        # every structural rule passes on the clean doc
-        assert out[1][rule], rule
-    # each failing doc fails ONLY its targeted structural rule
-    for rule, bad_doc in zip(structural, (2, 3, 4, 5, 6, 7)):
-        others = [r for r in structural if r != rule]
-        assert all(out[bad_doc][r] for r in others), (rule, bad_doc, out[bad_doc])

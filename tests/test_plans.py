@@ -115,16 +115,6 @@ def test_events_scan_prunes_partitions_by_lsn(spark):
     assert "PushedFilters" in p and "GreaterThan(lsn,400)" in p
 
 
-def test_multimodal_metadata_plan_is_python_free(spark):
-    """Metadata extraction must be pure JVM expressions — an Arrow crossing
-    (MapInPandas / *EvalPython) for length/sha2/hex is banned overhead."""
-    from embulk_filter_copy_spark.queries.pipeline import multimodal_metadata
-
-    p = plan(multimodal_metadata(spark, SF))
-    for node in ("MapInPandas", "BatchEvalPython", "ArrowEvalPython"):
-        assert node not in p
-
-
 def test_simhash_pairs_plan_is_banded_not_blocked(spark):
     """The near-dup join must key on simhash bit-bands, not a metadata
     column — metadata blocking is an all-pairs join in disguise."""
@@ -185,17 +175,6 @@ def test_mixture_sample_plan_broadcasts_weight_dim(spark):
     p = plan(mixture_sample(docs, "source", weights, key_col="doc_id"))
     assert "BroadcastHashJoin" in p
     assert p.count("CASE WHEN") <= 2  # the null-coalesce, not 50 branches
-
-
-def test_decontam_plan_broadcasts_bench_set(spark):
-    """Corpus never shuffles for the hit-join: bench hashes broadcast."""
-    from embulk_filter_copy_spark.operators.decontam import ngram_overlap
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    bench = docs.filter("doc_id % 10 = 0")
-    corpus = docs.filter("doc_id % 10 <> 0")
-    p = plan(ngram_overlap(corpus, bench, n=3))
-    assert "BroadcastHashJoin" in p
 
 
 def test_history_append_plan_single_batch_shuffle(spark, tmpdir_path):
@@ -296,14 +275,3 @@ def test_ann_recall_plan_broadcasts_hit_join(spark):
     p = plan(ann_recall_report(emb, emb.filter(F.col("vec_id") < 3),
                                n_cells=4, k=5, nprobe=1))
     assert "BroadcastHashJoin" in p
-
-
-def test_build_corpus_plan_no_cartesian(spark):
-    """The composed corpus build (gate -> dedup keep -> sample -> cap ->
-    shard) must stay equi-join/semi-join shaped end to end — any stage
-    degrading to a nested-loop would be quadratic at corpus scale."""
-    from embulk_filter_copy_spark.queries.pipeline import pipeline_build_corpus
-
-    p = plan(pipeline_build_corpus(spark, SF))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
