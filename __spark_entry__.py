@@ -2,8 +2,8 @@
 
 ``entry`` runs the flagship query (CDC replay of the events table through
 the LakeTable merge path) at sf0.001. ``queries`` / ``oracle_sql`` expose
-the 66 catalog queries (the 25 CDC engine queries first, then the TPC-H
-and training-data dedup/similarity/sampling queries), each paired with a
+the 53 catalog queries (the 25 CDC engine queries first, then the
+training-data dedup/similarity/sampling queries), each paired with a
 DuckDB oracle.
 """
 

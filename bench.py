@@ -79,9 +79,6 @@ MEDIAN_PROTOCOL_QUERIES = {
     "dedup_simhash_pairs",
     "dedup_jaccard3_pairs",
     "dedup_minhash_pairs",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
     "cdc_sessionize",
 }
 
@@ -91,10 +88,6 @@ HEADLINE_QUERIES = [
     "cdc_salted_agg",
     "cdc_sessionize",
     "asof_join_clicks",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "window_topk_orders_per_segment",
     "dedup_minhash_pairs",
     "dedup_jaccard3_pairs",
     "dedup_simhash_pairs",

@@ -26,39 +26,26 @@ columns (∝ changed rows, then ∝ touched groups), and the view merge joins
 delta against the stored view (∝ #groups — repos/languages, not rows). No
 stage ever scans the full fact table after the initial build.
 
-Freshness/consistency contract: the view stores the exact table version it
-reflects; refresh is idempotent (same version → no-op) and falls back to a
-full rebuild when the change feed cannot be trusted across the gap — a
-rollback or tombstone purge between the view's version and now (both raise
-in ``read_changes``), or a view version AHEAD of the table (rollback past
-the view).
+Freshness/consistency contract: the view is a LakeTable keyed by the
+group columns, in one bucket (one row per group). Every build, rebuild and
+refresh is one view commit that replaces that bucket and records
+``store_version``, the exact table version the view reflects
+(:meth:`LakeTable.source_version`). A reader planned on view version N
+keeps reading while N+1 commits; ``read(version=...)``, ``fsck``,
+``rollback`` and ``expire_snapshots`` work on a view path. A refresh is
+idempotent (same version → no-op) and falls back to a full rebuild when the
+change feed cannot be trusted across the gap — a rollback or tombstone
+purge between the view's version and now (both raise in ``read_changes``),
+or a view version AHEAD of the table (rollback past the view).
 """
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from embulk_filter_copy_spark.lake.schema import TableSchema
 from embulk_filter_copy_spark.lake.table import LakeTable
-
-_META = "_VIEW_META.json"
-
-
-def _meta_path(view_path: str) -> str:
-    return os.path.join(view_path, _META)
-
-
-def _read_meta(view_path: str) -> dict | None:
-    p = _meta_path(view_path)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
 
 
 def _aggregate(df: DataFrame, group_cols: list[str], sum_cols: list[str]) -> DataFrame:
@@ -68,34 +55,44 @@ def _aggregate(df: DataFrame, group_cols: list[str], sum_cols: list[str]) -> Dat
     )
 
 
-def _commit_view(spark: SparkSession, view_path: str, df: DataFrame, meta: dict) -> None:
-    """Write the view data then swing the meta pointer — a crash between the
-    two leaves the previous (version, data dir) pair fully intact."""
-    data_dir = os.path.join(view_path, f"data-{meta['version']:08d}-{uuid.uuid4().hex[:8]}")
-    df.write.mode("errorifexists").parquet(data_dir)
-    tmp = os.path.join(view_path, f".{_META}.{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        json.dump(dict(meta, data_dir=os.path.basename(data_dir)), f)
-    os.replace(tmp, _meta_path(view_path))
-    # sweep EVERY non-current data dir, not just the immediately-previous
-    # one — a crash between the pointer swap and this cleanup would
-    # otherwise leak a directory forever
-    keep = os.path.basename(data_dir)
-    for name in os.listdir(view_path):
-        if name.startswith("data-") and name != keep:
-            shutil.rmtree(os.path.join(view_path, name), ignore_errors=True)
+def _spec(view: LakeTable) -> tuple[list[str], list[str]]:
+    """(group_cols, sum_cols) of a view: its key columns, and the source
+    columns its ``sum_*`` columns total."""
+    group_cols = view.key_columns
+    return group_cols, [
+        f.name[len("sum_"):]
+        for f in view.schema.fields
+        if f.name not in group_cols and f.name != "n_rows"
+    ]
+
+
+def _publish(view: LakeTable, agg: DataFrame, version: int) -> None:
+    """One view commit: ``agg`` replaces the view's single bucket."""
+    for f in TableSchema.from_struct(agg.schema).fields:
+        if f.type != view.schema.field(f.name).type:
+            # a group column the source widened: widen the view too, or
+            # the write would cast the new values back down
+            view.update_schema(
+                {"action": "widen", "column": f.name, "to": f.type}, view.schema_lsn + 1
+            )
+    view.replace_buckets([0], agg, commit={"store_version": version})
+
+
+def _load(spark: SparkSession, view_path: str) -> LakeTable:
+    if not LakeTable.exists(view_path):
+        raise FileNotFoundError(f"no aggregate view at {view_path}")
+    return LakeTable.load(spark, view_path)
 
 
 def read_agg_view(spark: SparkSession, view_path: str) -> DataFrame:
-    meta = _read_meta(view_path)
-    if meta is None:
-        raise FileNotFoundError(f"no aggregate view at {view_path}")
-    return spark.read.parquet(os.path.join(view_path, meta["data_dir"]))
+    return _load(spark, view_path).read()
 
 
 def agg_view_version(view_path: str) -> int:
-    meta = _read_meta(view_path)
-    return -1 if meta is None else int(meta["version"])
+    if not LakeTable.exists(view_path):
+        return -1
+    v = LakeTable.load(None, view_path).source_version()
+    return -1 if v is None else v
 
 
 def build_agg_view(
@@ -107,16 +104,21 @@ def build_agg_view(
 ) -> dict:
     """Full build: one aggregation over the table's live rows at a pinned
     version. Runs once; every later refresh is incremental."""
-    sum_cols = list(sum_cols or [])
+    group_cols, sum_cols = list(group_cols), list(sum_cols or [])
     version = table.current_version()
-    os.makedirs(view_path, exist_ok=True)
     agg = _aggregate(table.read(version=version), group_cols, sum_cols)
-    _commit_view(
-        spark,
-        view_path,
-        agg,
-        {"version": version, "group_cols": list(group_cols), "sum_cols": sum_cols},
-    )
+    if LakeTable.exists(view_path):
+        view = LakeTable.load(spark, view_path)
+        if _spec(view) != (group_cols, sum_cols):
+            raise ValueError(
+                f"view at {view_path} aggregates {_spec(view)}, not {(group_cols, sum_cols)}"
+            )
+    else:
+        view = LakeTable.create(
+            spark, view_path, TableSchema.from_struct(agg.schema),
+            key_columns=group_cols, n_buckets=1,
+        )
+    _publish(view, agg, version)
     return {"mode": "full", "version": version}
 
 
@@ -151,21 +153,19 @@ def refresh_agg_view(spark: SparkSession, table: LakeTable, view_path: str) -> d
     version. Idempotent; falls back to a full rebuild when the feed refuses
     the gap (rollback / tombstone purge) or the table regressed below the
     view's version."""
-    meta = _read_meta(view_path)
-    if meta is None:
-        raise FileNotFoundError(
-            f"no aggregate view at {view_path}; run build_agg_view first"
-        )
-    group_cols, sum_cols = meta["group_cols"], meta["sum_cols"]
+    view = _load(spark, view_path)
+    since = view.source_version()
+    if since is None:
+        raise FileNotFoundError(f"aggregate view at {view_path} was never built")
+    group_cols, sum_cols = _spec(view)
     version = table.current_version()
-    since = int(meta["version"])
     if version == since:
         return {"mode": "noop", "version": version}
     if version < since:
         res = build_agg_view(spark, table, view_path, group_cols, sum_cols)
         return dict(res, mode="rebuild", reason="table regressed below view version")
     try:
-        # pin the window's END to the version the meta will record — a
+        # pin the window's END to the version the view will record — a
         # commit landing between the version read and the changelog scan
         # would otherwise be covered by the scan but NOT by the recorded
         # version, and the next refresh would re-apply it (double count)
@@ -175,7 +175,7 @@ def refresh_agg_view(spark: SparkSession, table: LakeTable, view_path: str) -> d
         return dict(res, mode="rebuild", reason=str(e))
     keys = set(table.key_columns)
     delta = _delta(log, keys, group_cols, sum_cols)
-    view = read_agg_view(spark, view_path)
+    old = view.read()
     # null-safe group equality: NULL is a legitimate group value, and a
     # plain equi-join would never match it (duplicating the null group on
     # every refresh)
@@ -186,12 +186,12 @@ def refresh_agg_view(spark: SparkSession, table: LakeTable, view_path: str) -> d
     )
     cond = None
     for g in group_cols:
-        piece = view[g].eqNullSafe(d[f"_g_{g}"])
+        piece = old[g].eqNullSafe(d[f"_g_{g}"])
         cond = piece if cond is None else (cond & piece)
     merged = (
-        view.join(d, on=cond, how="full_outer")
+        old.join(d, on=cond, how="full_outer")
         .select(
-            *[F.coalesce(view[g], d[f"_g_{g}"]).alias(g) for g in group_cols],
+            *[F.coalesce(old[g], d[f"_g_{g}"]).alias(g) for g in group_cols],
             (F.coalesce(F.col("n_rows"), F.lit(0)) + F.coalesce(F.col("_dn"), F.lit(0))).alias(
                 "n_rows"
             ),
@@ -205,10 +205,5 @@ def refresh_agg_view(spark: SparkSession, table: LakeTable, view_path: str) -> d
         )
         .filter(F.col("n_rows") > 0)
     )
-    _commit_view(
-        spark,
-        view_path,
-        merged,
-        {"version": version, "group_cols": group_cols, "sum_cols": sum_cols},
-    )
+    _publish(view, merged, version)
     return {"mode": "incremental", "version": version, "since": since}

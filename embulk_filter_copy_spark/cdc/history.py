@@ -463,10 +463,10 @@ def materialize_history(
 
 def materialized_store_version(dest: LakeTable) -> int:
     """Store snapshot version the view last caught up to."""
-    vs = [c["store_version"] for c in dest.commits() if "store_version" in c]
-    if not vs:
+    v = dest.source_version()
+    if v is None:
         raise ValueError("not a materialized history view (no store_version commits)")
-    return max(vs)
+    return v
 
 
 def refresh_history(store: LakeTable, dest: LakeTable, run_id: str = "mat") -> dict:

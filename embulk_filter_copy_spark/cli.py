@@ -225,16 +225,12 @@ def cmd_rollback(args) -> None:
 
 
 def cmd_aggview(args) -> None:
-    from embulk_filter_copy_spark.cdc.aggview import (
-        _read_meta,
-        build_agg_view,
-        refresh_agg_view,
-    )
+    from embulk_filter_copy_spark.cdc.aggview import build_agg_view, refresh_agg_view
     from embulk_filter_copy_spark.lake.table import LakeTable
 
     spark = _spark(args)
     t = LakeTable.load(spark, args.table)
-    if _read_meta(args.view) is None:
+    if not LakeTable.exists(args.view):
         if not args.group_by:
             raise SystemExit("--group-by is required to build a new view")
         res = build_agg_view(
@@ -459,7 +455,7 @@ def main(argv: list[str] | None = None) -> None:
     )
     av.set_defaults(func=cmd_aggview)
     av.add_argument("--table", required=True)
-    av.add_argument("--view", required=True, help="view root directory")
+    av.add_argument("--view", required=True, help="view table root")
     av.add_argument("--group-by", default=None, help="comma-separated group columns")
     av.add_argument("--sum", default=None, help="comma-separated sum columns")
 

@@ -54,6 +54,7 @@ import uuid
 from bisect import bisect_right
 from collections.abc import Iterator, Mapping
 from concurrent.futures import ThreadPoolExecutor
+from itertools import chain
 from operator import itemgetter
 
 import pyarrow.parquet as pq
@@ -1150,6 +1151,22 @@ class LakeTable:
         (ReuseInputExecutorPlugin.scala:61-64, LoaderState.scala:111-120).
         A range check on the root's exactly-once index."""
         return self.snapshot().has_commit(run_id, epoch, seq)
+
+    def source_version(self) -> int | None:
+        """The source-table version a derived table (a materialized SCD2
+        or aggregate view) reflects: the ``store_version`` of its newest
+        commit that carries one, or None. The root's inline tail answers
+        unless later maintenance commits (compaction, rollback markers)
+        pushed that record into a sealed segment; only then are segments
+        read, newest first. Newest, not largest: a view rebuilt after its
+        source rolled back records a lower version than before."""
+        snap = self.snapshot()
+        logs = chain([snap.root["tail"]], (snap.piece(n)["commits"] for n in snap.segment_names()))
+        for log in logs:
+            for c in reversed(log):
+                if "store_version" in c:
+                    return c["store_version"]
+        return None
 
     # ------------------------------------------------------------------
     # maintenance

@@ -1,10 +1,12 @@
 """Incremental aggregate view: delta maintenance must equal full recompute
 under inserts, updates, deletes, group-moving updates, null groups, rollback
-fallbacks, and repeated (idempotent) refreshes."""
+fallbacks, and repeated (idempotent) refreshes. The view is a LakeTable, so
+held readers, failed commits, fsck and expire behave as on any table."""
 
 import datetime
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from embulk_filter_copy_spark.cdc.aggview import (
@@ -244,18 +246,116 @@ def test_streaming_agg_views_reject_unknown_sink(spark, tmpdir_path):
         FanoutApplier(spark, leaves, "r", agg_views={"nope": ["/tmp/x"]})
 
 
-def test_commit_sweeps_crash_leaked_data_dirs(spark, tmpdir_path):
-    """A crash between the meta-pointer swap and cleanup leaks a data dir;
-    the NEXT commit must sweep every non-current one."""
+def test_failed_view_commit_keeps_the_previous_view(spark, tmpdir_path, monkeypatch):
+    """A refresh that dies writing the view's root leaves the previous
+    view readable and its version unchanged; the next refresh catches up
+    incrementally, and an orphan sweep removes the files the failed
+    commit wrote."""
     t = _mk(spark, os.path.join(tmpdir_path, "t"))
     vp = os.path.join(tmpdir_path, "view")
     apply_batch(t, _ev(spark, [(1, "I", 1, "a", 1.0)]), run_id="av", epoch=0)
     build_agg_view(spark, t, vp, group_cols=["grp"], sum_cols=["x"])
-    # simulate the leak: a stale dir from a crashed commit
-    leaked = os.path.join(vp, "data-99999999-deadbeef")
-    os.makedirs(leaked)
+    v = agg_view_version(vp)
+    before = _view(spark, vp)
     apply_batch(t, _ev(spark, [(2, "I", 2, "b", 2.0)]), run_id="av", epoch=1)
-    refresh_agg_view(spark, t, vp)
-    dirs = [d for d in os.listdir(vp) if d.startswith("data-")]
-    assert len(dirs) == 1 and not os.path.exists(leaked)
+
+    real = LakeTable._write_snapshot
+    view_root = os.path.abspath(vp)
+
+    def crash(self, snap):
+        if self.path == view_root:
+            raise OSError("crash before the view's root is written")
+        return real(self, snap)
+
+    monkeypatch.setattr(LakeTable, "_write_snapshot", crash)
+    with pytest.raises(OSError, match="crash"):
+        refresh_agg_view(spark, t, vp)
+    monkeypatch.undo()
+    assert _view(spark, vp) == before and agg_view_version(vp) == v
+
+    assert refresh_agg_view(spark, t, vp)["mode"] == "incremental"
     assert _view(spark, vp) == _direct(t)
+    view = LakeTable.load(spark, vp)
+    res = view.expire_snapshots(sweep_orphans=True, orphan_grace_seconds=0)
+    assert res["orphans_swept"] >= 1
+    on_disk = {
+        os.path.relpath(os.path.join(d, f), view.path)
+        for d, _, fs in os.walk(os.path.join(view.path, "data"))
+        for f in fs if f.endswith(".parquet")
+    }
+    live = {f["path"] for ver in range(1, view.current_version() + 1)
+            for f in view.snapshot_at(ver).files()}
+    assert on_disk == live
+    assert _view(spark, vp) == _direct(t)
+
+
+def test_reader_planned_before_a_refresh_keeps_reading(spark, tmpdir_path):
+    """A view frame planned on version N still collects after N+1 commits,
+    and time travel returns the pre-refresh aggregate."""
+    t = _mk(spark, os.path.join(tmpdir_path, "t"))
+    vp = os.path.join(tmpdir_path, "view")
+    apply_batch(t, _ev(spark, [(1, "I", 1, "a", 1.0), (2, "I", 2, None, 2.0)]),
+                run_id="av", epoch=0)
+    build_agg_view(spark, t, vp, group_cols=["grp"], sum_cols=["x"])
+    before = _view(spark, vp)
+    held = read_agg_view(spark, vp)
+    apply_batch(t, _ev(spark, [(3, "U", 1, "b", 3.0)]), run_id="av", epoch=1)
+    assert refresh_agg_view(spark, t, vp)["mode"] == "incremental"
+    assert _view(spark, vp) == _direct(t) != before
+    assert {r["grp"]: (r["n_rows"], round(r["sum_x"], 6)) for r in held.collect()} == before
+    view = LakeTable.load(spark, vp)  # the refresh was one commit
+    old = view.read(version=view.current_version() - 1)
+    assert {r["grp"]: (r["n_rows"], round(r["sum_x"], 6)) for r in old.collect()} == before
+    # the view's key and sum columns are fixed at its first build
+    with pytest.raises(ValueError, match="aggregates"):
+        build_agg_view(spark, t, vp, group_cols=["grp"], sum_cols=[])
+
+
+def test_cli_aggview_fsck_and_expire_on_a_view(spark, tmpdir_path, capsys):
+    """The CLI builds then refreshes a view; fsck and expire work on the
+    view path like on any table, and expire keeps the current rows."""
+    import json
+
+    from embulk_filter_copy_spark import cli
+
+    t = _mk(spark, os.path.join(tmpdir_path, "t"))
+    vp = os.path.join(tmpdir_path, "view")
+    apply_batch(t, _ev(spark, [(1, "I", 1, "a", 1.0), (2, "I", 2, None, 2.0)]),
+                run_id="av", epoch=0)
+
+    def run(*argv):
+        cli.main(["--master", "local[4]", *argv])
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    assert run("aggview", "--table", t.path, "--view", vp,
+               "--group-by", "grp", "--sum", "x")["mode"] == "full"
+    apply_batch(t, _ev(spark, [(3, "I", 3, "a", 3.0)]), run_id="av", epoch=1)
+    assert run("aggview", "--table", t.path, "--view", vp)["mode"] == "incremental"
+    assert _view(spark, vp) == _direct(t)
+    assert run("fsck", "--table", vp)["ok"]
+
+    view = LakeTable.load(spark, vp)
+    superseded = {f["path"] for f in view.snapshot_at(view.current_version() - 1).files()}
+    rows = _view(spark, vp)
+    res = run("expire", "--table", vp, "--keep-last", "1")
+    assert res["files_deleted"] == len(superseded) >= 1
+    assert not any(os.path.exists(os.path.join(vp, p)) for p in superseded)
+    assert _view(spark, vp) == rows
+
+
+def test_view_follows_a_widened_group_column(spark, tmpdir_path):
+    """The source widens its int group column to long; the refresh widens
+    the view's column too instead of casting the new groups back to int."""
+    t = LakeTable.create(
+        spark, os.path.join(tmpdir_path, "t"), [("k", "long"), ("g", "int")],
+        key_columns=["k"], n_buckets=2,
+    )
+    t.append(spark.createDataFrame([(1, 1), (2, 1)], "k long, g int").withColumn("_lsn", F.lit(1)))
+    vp = os.path.join(tmpdir_path, "view")
+    build_agg_view(spark, t, vp, group_cols=["g"])
+    t.update_schema({"action": "widen", "column": "g", "to": "long"}, schema_lsn=2)
+    big = 1 << 40
+    t.append(spark.createDataFrame([(3, big)], "k long, g long").withColumn("_lsn", F.lit(3)))
+    assert refresh_agg_view(spark, t, vp)["mode"] == "incremental"
+    got = {r["g"]: r["n_rows"] for r in read_agg_view(spark, vp).collect()}
+    assert got == {1: 2, big: 1}

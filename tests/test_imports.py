@@ -1,13 +1,13 @@
 """Every in-package import resolves. Many imports sit inside function bodies,
 so importing a module does not exercise them; this parses each source file
-instead and resolves every ``embulk_filter_copy_spark.*`` target without
-running any Spark code."""
+instead and resolves every ``embulk_filter_copy_spark.*`` target by path,
+without importing anything: a dangling import is reported on its own line
+only, not also on the healthy imports of the packages above it."""
 
 from __future__ import annotations
 
 import ast
 import functools
-import importlib.util
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -39,12 +39,14 @@ def _top_level_names(path: str) -> set[str]:
     return names
 
 
-def _spec(name: str):
-    # find_spec imports the parent packages, which may themselves fail
-    try:
-        return importlib.util.find_spec(name)
-    except ImportError:
-        return None
+def _source(mod: str) -> Path | None:
+    """The file that defines an in-package module: ``a/b.py`` or
+    ``a/b/__init__.py`` under ROOT."""
+    base = ROOT.joinpath(*mod.split("."))
+    for path in (base.with_suffix(".py"), base / "__init__.py"):
+        if path.is_file():
+            return path
+    return None
 
 
 def _unresolved(path: Path) -> list[str]:
@@ -59,15 +61,15 @@ def _unresolved(path: Path) -> list[str]:
         for mod, name in targets:
             if mod != PKG and not mod.startswith(PKG + "."):
                 continue
-            spec = _spec(mod)
-            if spec is None:
+            origin = _source(mod)
+            if origin is None:
                 bad.append(f"{path.relative_to(ROOT)}:{node.lineno} {mod}")
                 continue
             if name is None or name == "*":
                 continue
-            if spec.submodule_search_locations is not None and _spec(f"{mod}.{name}"):
+            if origin.name == "__init__.py" and _source(f"{mod}.{name}"):
                 continue
-            if name not in _top_level_names(spec.origin):
+            if name not in _top_level_names(str(origin)):
                 bad.append(f"{path.relative_to(ROOT)}:{node.lineno} {mod}.{name}")
     return bad
 

@@ -178,3 +178,33 @@ def test_format_v1_table_loads_reads_and_upgrades_on_commit(spark, tmpdir_path):
     assert fresh.high_lsn() == 5
     rep = fsck(spark, fresh)
     assert rep["ok"], rep["issues"]
+
+
+def test_source_version_reads_the_tail_before_any_segment(tmpdir_path, monkeypatch):
+    """A derived table's source version comes from its newest
+    ``store_version`` commit: from the root's tail when that commit is
+    there, from the sealed segments only once later commits pushed it
+    out, and the newest wins over a larger older one."""
+    path = os.path.join(tmpdir_path, "view")
+    _meta_table(path, 64, 3 * TAIL_COMMITS)  # sealed segments exist
+    t = LakeTable.load(None, path)
+    assert t.source_version() is None
+    t.add_commit({"store_version": 9})
+    t.add_commit({"store_version": 4})  # rebuilt after a source rollback
+    segments = os.path.join(path, "_meta", "log")
+    reads = []
+    real_open = builtins.open
+
+    def rec_open(f, *a, **k):
+        reads.append(str(f))
+        return real_open(f, *a, **k)
+
+    monkeypatch.setattr(builtins, "open", rec_open)
+    assert LakeTable.load(None, path).source_version() == 4
+    monkeypatch.undo()
+    assert reads and not [p for p in reads if p.startswith(segments)]
+    # maintenance commits (no store_version) push the record into a segment
+    for e in range(TAIL_COMMITS + 1):
+        t.add_commit({"run_id": "__compaction__", "epoch": e, "seq": 0})
+    assert not any("store_version" in c for c in t.snapshot()["tail"])
+    assert LakeTable.load(None, path).source_version() == 4

@@ -15,10 +15,7 @@ import __spark_entry__ as entry_mod
 import os
 
 SF_DIR = os.environ.get("EFC_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["events", "documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")
